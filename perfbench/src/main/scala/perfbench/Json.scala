@@ -1,0 +1,42 @@
+package perfbench
+
+/** Minimal JSON rendering for the benchmark's raw result file. */
+object Json {
+  /** Already-rendered JSON, inserted verbatim. */
+  final case class Raw(json: String)
+
+  def value(v: Any): String = v match {
+    case null | None => "null"
+    case Some(x) => value(x)
+    case Raw(j) => j
+    case s: String => quote(s)
+    case b: Boolean => b.toString
+    case d: Double =>
+      if (d.isNaN || d.isInfinite) "null" else d.toString
+    case f: Float => value(f.toDouble)
+    case n: Int => n.toString
+    case n: Long => n.toString
+    case m: Map[_, _] =>
+      m.map { case (k, x) => quote(k.toString) + ":" + value(x) }
+        .mkString("{", ",", "}")
+    case xs: Iterable[_] => xs.map(value).mkString("[", ",", "]")
+    case xs: Array[_] => xs.map(value).mkString("[", ",", "]")
+    case other => quote(other.toString)
+  }
+
+  def obj(kv: (String, Any)*): String =
+    kv.map { case (k, v) => quote(k) + ":" + value(v) }.mkString("{", ",", "}")
+
+  private def quote(s: String): String = {
+    val b = new StringBuilder("\"")
+    s.foreach {
+      case '"' => b ++= "\\\""
+      case '\\' => b ++= "\\\\"
+      case '\n' => b ++= "\\n"
+      case c if c < ' ' => b ++= f"\\u${c.toInt}%04x"
+      case c => b += c
+    }
+    b += '"'
+    b.toString
+  }
+}
