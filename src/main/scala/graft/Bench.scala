@@ -65,7 +65,8 @@ import scala.jdk.CollectionConverters._
   * is self-evident from the artifact without cross-referencing other
   * rounds' baselines.
   *
-  * Env knobs: SPARK_GRAFT_SF_DIR (data), SPARK_GRAFT_CPUS (local[N]),
+  * Env knobs: SPARK_GRAFT_SF_DIR (data), SPARK_GRAFT_CPUS (local[N],
+  * default the machine's core count),
   * SPARK_GRAFT_BENCH_FREE (default 1), SPARK_GRAFT_BENCH_GC
   * (default 1 — explicit collection between queries, outside every
   * timed window), SPARK_GRAFT_ARTIFACT (diagnostic JSON path,
@@ -268,7 +269,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val freeBetween = sys.env.getOrElse("SPARK_GRAFT_BENCH_FREE", "1") == "1"
     val gcBetween = sys.env.getOrElse("SPARK_GRAFT_BENCH_GC", "1") == "1"
     val names = sys.env.get("SPARK_GRAFT_BENCH_QUERIES")

@@ -6,8 +6,11 @@ import org.apache.spark.sql.types.LongType
 
 /** Loaders for the driver-provided parquet tables (TESTDATA.md).
   *
-  * Schemas are declared, never inferred beyond parquet's own footer
-  * (SURVEY.md §1.3): at 100 TB a schema inference pass is a full scan.
+  * Schemas come from parquet's own footer, never from a data pass
+  * (SURVEY.md §1.3): `load` goes through `Reads.parquet`, which reads
+  * one footer on the driver (the file Spark's inference would pick)
+  * and converts it with Spark's converter under the session's settings
+  * — so no load runs a schema-inference job.
   * Each table is one parquet path; on a real cluster these would be
   * date-partitioned directories — the loaders take the directory so the
   * layout can change without touching query code.
@@ -31,7 +34,7 @@ object Tables {
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     ensureSessionConf(spark)
-    spark.read.parquet(s"$dir/$name.parquet")
+    Reads.parquet(spark, s"$dir/$name.parquet")
   }
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")

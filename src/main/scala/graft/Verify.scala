@@ -6,7 +6,8 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     // all scale-critical confs come from the shared factory (r15
     // verdict #3 — one place, asserted in GraftSessionSpec)
     val spark = GraftSession.local(cpus).getOrCreate()

@@ -1,6 +1,6 @@
 package graft.analytics
 
-import graft.Tables
+import graft.{Reads, Tables}
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -2208,7 +2208,7 @@ object TextAnalysis {
         StructType(Seq(StructField("src", StringType, nullable = false),
           StructField("bucket", LongType, nullable = false),
           StructField("c_all", LongType), StructField("c_t", LongType))))
-    else s.read.parquet(segs: _*)
+    else Reads.parquet(s, segs: _*)
   }
 
   /** One durable DSIR delivery: the batch's bucket-count DELTA lands as
@@ -2315,7 +2315,7 @@ object TextAnalysis {
       ManifestFeed.deliver(docs.filter(col("doc_id") % 2 === 1), root, 1L, 2)
       q.processAllAvailable()
     } finally q.stop()
-    s.read.option("recursiveFileLookup", "true").parquet(outDir)
+    Reads.parquet(s, Map("recursiveFileLookup" -> "true"), outDir)
       .orderBy(col("delivery"), col("doc_id"))
   }
 }

@@ -1,6 +1,6 @@
 package graft.dedup
 
-import graft.Tables
+import graft.{Reads, Tables}
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -383,7 +383,7 @@ object Dedup {
     * corpus or signature index) as one DataFrame.
     */
   def readSegments(spark: SparkSession, dir: String): DataFrame =
-    spark.read.option("recursiveFileLookup", "true").parquet(dir)
+    Reads.parquet(spark, Map("recursiveFileLookup" -> "true"), dir)
 
   /** COMPACTION for the append-only segment tree: fold every existing
     * segment directory into one, then remove the inputs. Run it
@@ -416,8 +416,8 @@ object Dedup {
       .digest(inputs.map(_.getName).sorted.mkString(",").getBytes("UTF-8"))
       .take(6).map("%02x".format(_)).mkString
     val target = s"$dir/seg_compact_$tag"
-    spark.read.option("recursiveFileLookup", "true")
-      .parquet(inputs.map(_.toString): _*)
+    Reads.parquet(spark, Map("recursiveFileLookup" -> "true"),
+        inputs.map(_.toString): _*)
       .dropDuplicates(dedupKeys)
       .write.mode("overwrite").parquet(target)
     inputs.foreach(p => fs.delete(p, true))
@@ -1899,7 +1899,7 @@ object Dedup {
             n.stripPrefix("seg_").toLong < before
         }
         .map(_.getPath.toString)
-    if (segs.isEmpty) emptyGramIndex(s) else s.read.parquet(segs: _*)
+    if (segs.isEmpty) emptyGramIndex(s) else Reads.parquet(s, segs: _*)
   }
 
   /** One durable exact-runs delivery: report delta + gram delta land

@@ -1,6 +1,6 @@
 package graft.similarity
 
-import graft.Tables
+import graft.{Reads, Tables}
 import graft.functions.TextFunctions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -386,7 +386,7 @@ object Hybrid {
   def resolveHybridRung(s: SparkSession, root: String,
       target: Double): (Int, Int, Double) = {
     def readRows(): Seq[(Int, Int, Double, Double)] =
-      s.read.parquet(s"$root/dial")
+      Reads.parquet(s, s"$root/dial")
         .select(col("c"), col("rrf_k"), col("w_lex"), col("mean_ndcg"))
         .collect()
         .map(r => (r.getInt(0), r.getInt(1), r.getDouble(2), r.getDouble(3)))
@@ -438,7 +438,7 @@ object Hybrid {
     // returned plan itself is discarded — this is store introspection)
     hybridServeDialed(s, dir, k)
     val root = hybridDialRoot(s, dir)
-    s.read.parquet(s"$root/dial")
+    Reads.parquet(s, s"$root/dial")
       .select(col("c").cast(LongType).as("c"),
         col("rrf_k").cast(LongType).as("rrf_k"), col("w_lex"),
         col("n_queries"), col("p_hits"), col("mrr_sum"), col("ndcg_sum"),

@@ -1,6 +1,6 @@
 package graft.store
 
-import graft.Tables
+import graft.{Reads, Tables}
 import graft.similarity.{Similarity, TopKByCos}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -128,15 +128,15 @@ object AnnIndex {
     // candidate set before any scoring, so a selective predicate can
     // never starve the top-k the way post-filtering a fixed-size
     // result list does
-    val codes = keepIds.foldLeft(spark.read.parquet(s"$root/codes"))(
+    val codes = keepIds.foldLeft(Reads.parquet(spark, s"$root/codes"))(
       (c, keep) => c.join(keep, Seq("vec_id"), "left_semi"))
     // codebooks are a 8×16-codeword index header — localized per store
     // state (r19, StoreRoot.localizedArtifact) so a warm serve's LUT
     // build is driver-local instead of a parquet scan + broadcast job.
     // vnorms stay distributed: one row per vector, linear in n.
     val cw = StoreRoot.localizedArtifact(spark, s"$root/codebooks")(
-      spark.read.parquet(s"$root/codebooks"))
-    val vnorms = spark.read.parquet(s"$root/vnorms")
+      Reads.parquet(spark, s"$root/codebooks"))
+    val vnorms = Reads.parquet(spark, s"$root/vnorms")
     val lut = queries
       .select(col("query_id"), explode(sequence(lit(0), lit(7))).as("s"),
         col("q_emb"))
@@ -214,7 +214,7 @@ object AnnIndex {
         col("q_emb").as("embedding")))
       .select(col("vec_id").as("query_id"),
         col("qv8").as("q_qv"), col("qn").as("q_qn"))
-    val v8 = spark.read.parquet(s"$root/vecs8")
+    val v8 = Reads.parquet(spark, s"$root/vecs8")
       .select(col("vec_id").as("neighbor_id"),
         col("qv8").as("n_qv"), col("qn").as("n_qn"))
     // native exact-integer dot straight over the stored BYTE arrays
@@ -249,7 +249,7 @@ object AnnIndex {
     val cand = servePqTopkSq8(spark, root, queries, k = c)
       .select(col("query_id"), col("neighbor_id").as("vec_id"),
         col("q8_cos").as("rel"))
-    val v8 = spark.read.parquet(s"$root/vecs8")
+    val v8 = Reads.parquet(spark, s"$root/vecs8")
       .select(col("vec_id"), col("qv8"))
     // the qv8→double cast feeds only MMR's pairwise stage, so it runs
     // AFTER the broadcast join — |queries|×c interpreted transforms
@@ -331,7 +331,7 @@ object AnnIndex {
       .map(_.getPath.getName).filter(_.startsWith("cell="))
       .map(n => n.stripPrefix("cell=").toLong)
       .map(p => p -> rootCellOf(p)).filter(t => routedSet.contains(t._2)).toSeq
-    val table = spark.read.parquet(dir.toString)
+    val table = Reads.parquet(spark, dir.toString)
     val physTyped: Seq[Any] = table.schema("cell").dataType match {
       case IntegerType => phys.map(_._1.toInt)
       case _           => phys.map(_._1)
@@ -360,7 +360,7 @@ object AnnIndex {
     // store state (r19) so the route job runs over local relations
     // instead of re-scanning the centroid parquet on every warm serve
     val cent = StoreRoot.localizedArtifact(spark, s"$root/centroids")(
-      spark.read.parquet(s"$root/centroids"))
+      Reads.parquet(spark, s"$root/centroids"))
     val qc = queries.crossJoin(broadcast(cent))
       .select(col("query_id"), col("q_emb"), col("cell"),
         round(Similarity.cosine(col("q_emb"), col("centroid")), 6).as("cos_c"))
@@ -454,10 +454,10 @@ object AnnIndex {
     // centroids + codebooks localized per store state (r19, see
     // serveIvfTopk / pqAdcApprox); vnorms stay distributed (linear in n)
     val cent = StoreRoot.localizedArtifact(spark, s"$root/centroids")(
-      spark.read.parquet(s"$root/centroids"))
+      Reads.parquet(spark, s"$root/centroids"))
     val cw = StoreRoot.localizedArtifact(spark, s"$root/codebooks")(
-      spark.read.parquet(s"$root/codebooks"))
-    val vnorms = spark.read.parquet(s"$root/vnorms")
+      Reads.parquet(spark, s"$root/codebooks"))
+    val vnorms = Reads.parquet(spark, s"$root/vnorms")
     val qc = queries.crossJoin(broadcast(cent))
       .select(col("query_id"), col("q_emb"), col("cell"),
         round(Similarity.cosine(col("q_emb"), col("centroid")), 6).as("cos_c"))
@@ -578,7 +578,7 @@ object AnnIndex {
     else {
       // the deletes table is single-column by contract (vec_id for the
       // ANN stores, doc_id for the lexical one)
-      val dels = spark.read.parquet(d.toString)
+      val dels = Reads.parquet(spark, d.toString)
       df.join(
         broadcast(dels.select(col(dels.columns.head).as(idCol)).distinct()),
         Seq(idCol), "left_anti")
@@ -607,7 +607,7 @@ object AnnIndex {
       filesPerBatch: Int): DataFrame = {
     val spark = newEmb.sparkSession
     val cent = Similarity.materializeSmall(
-      spark.read.parquet(s"$root/centroids"))
+      Reads.parquet(spark, s"$root/centroids"))
     val assigned = Similarity
       .assignCells(newEmb.select(col("vec_id"), col("embedding")), cent)
       .select(col("cell"), col("vec_id"), col("embedding"))
@@ -648,9 +648,9 @@ object AnnIndex {
       filesPerBatch: Int = 1): Unit = {
     val spark = newEmb.sparkSession
     lazy val cent = Similarity.materializeSmall(
-      spark.read.parquet(s"$root/centroids"))
+      Reads.parquet(spark, s"$root/centroids"))
     lazy val cw = Similarity.materializeSmall(
-      spark.read.parquet(s"$root/codebooks"))
+      Reads.parquet(spark, s"$root/codebooks"))
     lazy val cells = Similarity.assignCells(
       newEmb.select(col("vec_id"), col("embedding")), cent)
       .select(col("vec_id"), col("cell"))
@@ -670,7 +670,7 @@ object AnnIndex {
         // PQ assignment is the expensive step of the append and must
         // run once per batch
         val stagedCodes = path.substring(0, path.lastIndexOf('/')) + "/cellcodes"
-        spark.read.parquet(stagedCodes)
+        Reads.parquet(spark, stagedCodes)
           .join(broadcast(cw), Seq("s", "code"))
           .groupBy(col("vec_id"))
           .agg(sqrt(sum(Similarity.dot(col("cw"), col("cw")))).as("vnorm"))
@@ -705,9 +705,9 @@ object AnnIndex {
   def appendIvfPq(newEmb: DataFrame, root: String): Unit = {
     val spark = newEmb.sparkSession
     val cent = Similarity.materializeSmall(
-      spark.read.parquet(s"$root/centroids"))
+      Reads.parquet(spark, s"$root/centroids"))
     val cw = Similarity.materializeSmall(
-      spark.read.parquet(s"$root/codebooks"))
+      Reads.parquet(spark, s"$root/codebooks"))
     val cells = Similarity.assignCells(
       newEmb.select(col("vec_id"), col("embedding")), cent)
       .select(col("vec_id"), col("cell"))
@@ -732,7 +732,7 @@ object AnnIndex {
       root: String): Seq[(String, DataFrame)] = {
     val spark = newEmb.sparkSession
     val cw = Similarity.materializeSmall(
-      spark.read.parquet(s"$root/codebooks"))
+      Reads.parquet(spark, s"$root/codebooks"))
     val codes = Similarity.pqAssign(
       newEmb.select(col("vec_id"), col("embedding")), cw)
     Seq(
@@ -778,7 +778,7 @@ object AnnIndex {
     // expensive PQ assignment runs once per batch, not twice
     val spark = newEmb.sparkSession
     lazy val cw = Similarity.materializeSmall(
-      spark.read.parquet(s"$root/codebooks"))
+      Reads.parquet(spark, s"$root/codebooks"))
     lazy val codes = Similarity.pqAssign(
       newEmb.select(col("vec_id"), col("embedding")), cw)
     BatchCommit.commit(spark, root, batchId,
@@ -792,7 +792,7 @@ object AnnIndex {
         sq8Of(newEmb).repartition(filesPerBatch).write.parquet(path)
       case (_, path) =>
         val stagedCodes = path.substring(0, path.lastIndexOf('/')) + "/codes"
-        spark.read.parquet(stagedCodes)
+        Reads.parquet(spark, stagedCodes)
           .join(broadcast(cw), Seq("s", "code"))
           .groupBy(col("vec_id"))
           .agg(sqrt(sum(Similarity.dot(col("cw"), col("cw")))).as("vnorm"))
@@ -922,7 +922,7 @@ object AnnIndex {
   def embPqServeFiltered(s: SparkSession, dir: String,
       k: Int = 5): DataFrame = {
     val root = ensuredPqRoot(s, dir)
-    val keep = s.read.parquet(s"$root/attrs")
+    val keep = Reads.parquet(s, s"$root/attrs")
       .filter(col("label") % 3 === 0).select(col("vec_id"))
     servePqTopk(s, root, queryLiterals(s, dir), k, Some(keep))
   }
@@ -1061,7 +1061,7 @@ object AnnIndex {
     val n = emb.count()
     val root = indexRoot(s, dir, "ivf", n)
     ensureBuilt(s, root)(staging => buildIvf(emb, staging))
-    s.read.parquet(s"${root.toString}/lists")
+    Reads.parquet(s, s"${root.toString}/lists")
       .groupBy(col("cell").cast(LongType).as("cell"))
       .agg(count(lit(1)).as("n_vecs"))
       .select(col("cell"), col("n_vecs"),
@@ -1080,7 +1080,7 @@ object AnnIndex {
     */
   def cellGuard(s: SparkSession, root: String, sub: String,
       rowsPerVec: Int = 1, factor: Int = 4): DataFrame = {
-    val nCells = s.read.parquet(s"$root/centroids").count()
+    val nCells = Reads.parquet(s, s"$root/centroids").count()
     // COMMITTED files only — the same census the splitter acts on: a
     // torn batch's rows must not trip an alarm the splitter (rightly)
     // refuses to touch, or maintenance would loop on a phantom action
@@ -1094,8 +1094,7 @@ object AnnIndex {
       return s.range(1).select(
         lit(0L).as("n_cells"), lit(0L).as("n_vecs"),
         lit(0L).as("bound"), lit(0L).as("cells_over_bound"))
-    val pops = s.read.option("basePath", s"$root/$sub")
-      .parquet(committed: _*)
+    val pops = Reads.parquet(s, Map("basePath" -> s"$root/$sub"), committed: _*)
       .groupBy(col("cell"))
       .agg((count(lit(1)) / rowsPerVec).cast(LongType).as("pop"))
     val tot = pops.agg(sum(col("pop")).as("n_vecs"))
@@ -1151,7 +1150,7 @@ object AnnIndex {
     // id (vec_id mod 16 — the seed family only picks Lloyd's starting
     // point; the spec's reference build uses the same recipe)
     val emb = minusDeletes(spark, root,
-      spark.read.option("basePath", s"$root/lists").parquet(committed: _*)
+      Reads.parquet(spark, Map("basePath" -> s"$root/lists"), committed: _*)
         .select(col("vec_id"), pmod(col("vec_id"), lit(16L)).as("label"),
           col("embedding")), "vec_id")
     republish(spark, root, torn.nonEmpty)(tmp => buildIvf(emb, tmp))
@@ -1218,7 +1217,7 @@ object AnnIndex {
     }.distinct
     val deletesCopy =
       if (tornExists && fs.exists(new Path(s"$root/deletes")))
-        Some(spark.read.parquet(s"$root/deletes").select(col("vec_id")))
+        Some(Reads.parquet(spark, s"$root/deletes").select(col("vec_id")))
       else None
     StoreRoot.swapDir(spark, root) { tmp =>
       build(tmp)
@@ -1265,7 +1264,7 @@ object AnnIndex {
     // dials are separate manifests on separate index kinds
     val payload = Seq(col("vec_id"), col("embedding")) ++
       labelEq.map(_ => col("label")).toSeq
-    val lists = s.read.parquet(s"$root/lists").select(payload: _*)
+    val lists = Reads.parquet(s, s"$root/lists").select(payload: _*)
     val exact = Similarity.materializeSmall(
       Similarity.embTopkDf(lists, k,
           candPred = labelEq.map(l => col("label") === lit(l)))
@@ -1308,7 +1307,7 @@ object AnnIndex {
   def resolveNprobe(s: SparkSession, root: String,
       targetRecall: Double): Int = {
     def readRows(): Seq[(Long, Double)] =
-      s.read.parquet(s"$root/dial")
+      Reads.parquet(s, s"$root/dial")
         .orderBy(col("nprobe"))
         .select(col("nprobe"), col("mean_recall")).collect()
         .map(r => (r.getLong(0), r.getDouble(1))).toSeq
@@ -1365,7 +1364,7 @@ object AnnIndex {
       buildIvf(emb, staging)
       writeIvfDial(s, staging, queryLiterals(s, dir), k)
     }
-    s.read.parquet(s"${root.toString}/dial")
+    Reads.parquet(s, s"${root.toString}/dial")
       .select(col("nprobe"), col("hits"), col("n_queries"),
         col("mean_recall"))
       .orderBy(col("nprobe"))

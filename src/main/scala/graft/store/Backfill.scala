@@ -2,6 +2,7 @@ package graft.store
 
 import java.time.LocalDate
 
+import graft.Reads
 import graft.streaming.Streams
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -52,7 +53,7 @@ object Backfill {
       servedUntil: java.sql.Timestamp): DataFrame = {
     // hour alignment, or one bucket would be split across both sides
     require(servedUntil.getTime % 3600000L == 0, s"not hour-aligned: $servedUntil")
-    val closed = spark.read.parquet(rollupDir)
+    val closed = Reads.parquet(spark, rollupDir)
       .filter(col("bucket") < lit(servedUntil))
       .drop("bucket_date")
     val tail = Streams.hourlyRollup(
@@ -147,14 +148,12 @@ object Backfill {
     val ranged = events.filter(
       col("ts") >= lit(from.toString).cast("timestamp_ntz") &&
       col("ts") < lit(to.toString).cast("timestamp_ntz"))
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try
-      hourlyRollupPartitioned(ranged)
-        .write.mode("overwrite").partitionBy("bucket_date").parquet(rollupDir)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    // per-write option, not the session conf: a session-wide switch
+    // would leak `dynamic` into writes on other threads, and a
+    // concurrent refresh restoring `static` first would turn this one
+    // into a static overwrite that deletes every untouched partition
+    hourlyRollupPartitioned(ranged)
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("bucket_date").parquet(rollupDir)
   }
 }

@@ -1,5 +1,6 @@
 package graft.store
 
+import graft.Reads
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -66,7 +67,7 @@ object Compaction {
         partitioned = false)
     val del =
       if (delCommitted.nonEmpty)
-        Some(spark.read.parquet(delCommitted: _*)
+        Some(Reads.parquet(spark, delCommitted: _*)
           .select(col(idCol)).distinct())
       else None
     var tornSeen = delTorn.nonEmpty
@@ -77,9 +78,9 @@ object Compaction {
       tornSeen = tornSeen || torn.nonEmpty
       if (committed.nonEmpty) {
         val raw =
-          if (partitioned) spark.read.option("basePath", s"$root/$sub")
-            .parquet(committed: _*)
-          else spark.read.parquet(committed: _*)
+          if (partitioned)
+            Reads.parquet(spark, Map("basePath" -> s"$root/$sub"), committed: _*)
+          else Reads.parquet(spark, committed: _*)
         val live = del match {
           case Some(d) if raw.columns.contains(idCol) =>
             raw.join(broadcast(d), Seq(idCol), "left_anti")
@@ -177,9 +178,8 @@ object Compaction {
     val (committed, _) =
       BatchCommit.committedDataFiles(spark, root, sub, partitioned = true)
     if (committed.isEmpty) return 0
-    val nCells = spark.read.parquet(s"$root/centroids").count()
-    val lists = spark.read.option("basePath", s"$root/$sub")
-      .parquet(committed: _*)
+    val nCells = Reads.parquet(spark, s"$root/centroids").count()
+    val lists = Reads.parquet(spark, Map("basePath" -> s"$root/$sub"), committed: _*)
     val pops = lists.groupBy(col("cell"))
       .agg((count(lit(1)) / rowsPerVec).cast("long").as("pop")).collect()
       .map(r => r.getAs[Number]("cell").longValue -> r.getAs[Long]("pop"))

@@ -2,6 +2,7 @@ package graft.store
 
 import java.time.LocalDate
 
+import graft.Reads
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -138,7 +139,7 @@ object Lifecycle {
       filesPerPartition: Int = 1): Unit = {
     val tmp = dir + "__compacting"
     val old = dir + "__old"
-    spark.read.parquet(dir)
+    Reads.parquet(spark, dir)
       .repartition(filesPerPartition, col("event_date"))
       .sortWithinPartitions(col(keyCol), col(tsCol).desc)
       .write.mode("overwrite").partitionBy("event_date").parquet(tmp)
@@ -170,7 +171,7 @@ object Lifecycle {
 
   /** The maintained-view read path, same shape/order as the ad-hoc O2. */
   def readAnomalies(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir)
+    Reads.parquet(spark, dir)
       .select(col("event_id"), col("ts"), col("user_id"), col("value"))
       .orderBy(col("ts").desc)
 

@@ -1,5 +1,6 @@
 package graft.store
 
+import graft.Reads
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** STORE MANIFEST — the L9-style introspection surface for the
@@ -20,7 +21,7 @@ object Manifest {
     val pqRoot = AnnIndex.ensuredPqRoot(s, dir)
     val lexRoot = TextIndex.ensuredRoot(s, dir)
     def countOf(root: String, sub: String): Long =
-      s.read.parquet(s"$root/$sub").count()
+      Reads.parquet(s, s"$root/$sub").count()
     val rows =
       Seq("attrs", "codebooks", "codes", "vecs8", "vnorms")
         .map(sub => ("pq", sub, countOf(pqRoot, sub))) ++

@@ -1,6 +1,6 @@
 package graft.store
 
-import graft.Tables
+import graft.{Reads, Tables}
 import graft.functions.TextFunctions
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -80,10 +80,10 @@ object TextIndex {
     tfOf(docs).select(col("tok"), col("doc_id"), col("tf"))
       .repartition(col("tok")).sortWithinPartitions(col("tok"))
       .write.parquet(s"$path/postings")
-    val postings = spark.read.parquet(s"$path/postings")
+    val postings = Reads.parquet(spark, s"$path/postings")
     dfOf(postings).write.parquet(s"$path/df")
     dlOf(postings).write.parquet(s"$path/dl")
-    statsOf(spark.read.parquet(s"$path/dl")).write.parquet(s"$path/stats")
+    statsOf(Reads.parquet(spark, s"$path/dl")).write.parquet(s"$path/stats")
   }
 
   /** EXACTLY-ONCE incremental append — the lexical twin of
@@ -99,7 +99,7 @@ object TextIndex {
     val spark = docs.sparkSession
     BatchCommit.commit(spark, root, batchId,
       Seq("postings", "df", "dl", "stats").map(_ -> false)) { (sub, path) =>
-      def staged(name: String) = spark.read.parquet(
+      def staged(name: String) = Reads.parquet(spark, 
         path.substring(0, path.lastIndexOf('/')) + "/" + name)
       val bounded = sub match {
         // bound files per batch WITHOUT losing the postings' term
@@ -155,12 +155,12 @@ object TextIndex {
     val ids =
       if (delCommitted.isEmpty) fresh
       else fresh.join(
-        spark.read.parquet(delCommitted: _*).select(col("doc_id")),
+        Reads.parquet(spark, delCommitted: _*).select(col("doc_id")),
         Seq("doc_id"), "left_anti")
     // cached for the batch: the df and stats stages both aggregate the
     // deleted docs' postings — one scan of the store's largest table,
     // not two
-    val gone = spark.read.parquet(s"$root/postings")
+    val gone = Reads.parquet(spark, s"$root/postings")
       .join(broadcast(ids), Seq("doc_id"), "left_semi").persist()
     try BatchCommit.commit(spark, root, batchId,
       Seq("deletes", "df", "stats").map(_ -> false)) { (sub, path) =>
@@ -227,16 +227,16 @@ object TextIndex {
     */
   def serveBm25(spark: SparkSession, root: String, k: Int = 5): DataFrame = {
     val postings = minusDeletes(spark, root,
-      spark.read.parquet(s"$root/postings"))
+      Reads.parquet(spark, s"$root/postings"))
     // df and stats are append-only DELTAS — sum them (the identity
     // when the index was built in one shot). The summed stats row is a
     // one-row index header, localized per store state (r19,
     // StoreRoot.localizedArtifact): the per-serve scan + two-phase
     // aggregate + broadcast build over a few-row table was 3 fixed
     // stages of pure latency on every warm serve.
-    val dl = spark.read.parquet(s"$root/dl")
+    val dl = Reads.parquet(spark, s"$root/dl")
     val stats = StoreRoot.localizedArtifact(spark, s"$root/stats")(
-      spark.read.parquet(s"$root/stats")
+      Reads.parquet(spark, s"$root/stats")
         .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl")))
     // the panel's terms as a LITERAL relation (control-plane — ≤
     // panel×terms rows, the lexical twin of the IVF probe route): the
@@ -270,7 +270,7 @@ object TextIndex {
     // re-run of the serve queries before this)
     val queryToks: Seq[Any] =
       qtRows.map(_.getString(1)).distinct.sorted.toSeq
-    val dfreq = spark.read.parquet(s"$root/df")
+    val dfreq = Reads.parquet(spark, s"$root/df")
       .filter(col("tok").isInCollection(queryToks))
       .groupBy(col("tok")).agg(sum(col("df")).as("df"))
     val term = postings.filter(col("tok").isInCollection(queryToks))

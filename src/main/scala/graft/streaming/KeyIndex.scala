@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Reads
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Key sidecar index for the keyed transactional sink
@@ -240,7 +241,7 @@ object KeyIndex {
     val prefix = s"${epoch}batch0-"
     val tmp = new Path(s"$outDir/_staging/${epoch}keyidx-$date")
     fs.delete(tmp, true)
-    val allKeys = spark.read.parquet(files.map(_.toString): _*)
+    val allKeys = Reads.parquet(spark, files.map(_.toString): _*)
       .select(keys.map(org.apache.spark.sql.functions.col): _*)
       .distinct()
     val n = allKeys.count()
@@ -270,21 +271,45 @@ object KeyIndex {
   }
 
   /** Build a bloom over the xxhash64 of the composite key, distributed
-    * (per-partition blooms merged on the driver — never the rows).
+    * (per-partition blooms merged on the driver — never the rows): the
+    * one-date case of `bloomsByDate`.
     */
   def bloomOf(df: org.apache.spark.sql.DataFrame, keys: Seq[String],
-      expected: Long): KeyBloom = {
-    val hashes = df.select(keyHashCol(df, keys).as("h"))
-    val spark = df.sparkSession
-    import spark.implicits._
-    val partial = hashes.as[Long].mapPartitions { it =>
-      val b = KeyBloom.create(math.max(expected, 64L))
-      it.foreach(b.put)
-      Iterator(b.serialize)
-    }(org.apache.spark.sql.Encoders.BINARY).collect()
-    val merged = KeyBloom.create(math.max(expected, 64L))
-    partial.foreach(p => merged.merge(KeyBloom.deserialize(p)))
-    merged
+      expected: Long): KeyBloom =
+    bloomsByDate(df, org.apache.spark.sql.functions.lit(0), keys, Some(expected))
+      .getOrElse(0, KeyBloom.create(expected))
+
+  /** One bloom per distinct `date` value, all built in ONE job; each
+    * task holds its rows' key hashes (8 bytes a row) until it knows
+    * every date's count. With `expected`, every bloom is sized for that
+    * many keys and per-partition partials are OR-merged on the driver.
+    * Without it, each
+    * date's bloom is sized by that date's own row count, which a task
+    * only knows when it holds ALL of the date's rows — so the input must
+    * be hash-partitioned by date (the keyed commit's staged relation
+    * is); a date seen by two tasks fails the build instead of yielding
+    * differently sized partials.
+    */
+  def bloomsByDate(df: org.apache.spark.sql.DataFrame,
+      date: org.apache.spark.sql.Column, keys: Seq[String],
+      expected: Option[Long] = None): Map[Any, KeyBloom] = {
+    import scala.collection.mutable
+    val partials = df.select(date, keyHashCol(df, keys)).rdd.mapPartitions { it =>
+      val byDate = mutable.LinkedHashMap.empty[Any, mutable.ArrayBuilder.ofLong]
+      it.foreach(r =>
+        byDate.getOrElseUpdate(r.get(0), new mutable.ArrayBuilder.ofLong) += r.getLong(1))
+      byDate.iterator.map { case (d, hs) =>
+        val h = hs.result()
+        val b = KeyBloom.create(expected.getOrElse(h.length.toLong))
+        h.foreach(b.put)
+        (d, b.serialize)
+      }
+    }.collect()
+    partials.groupBy(_._1).map { case (d, ps) =>
+      require(expected.isDefined || ps.length == 1,
+        s"bloomsByDate: rows of $d span ${ps.length} partitions")
+      d -> ps.map(p => KeyBloom.deserialize(p._2)).reduce(_ merge _)
+    }
   }
 
   def writeBloom(fs: FileSystem, path: Path, bloom: KeyBloom): Unit = {

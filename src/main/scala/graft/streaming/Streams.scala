@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Reads
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -275,8 +276,9 @@ object Streams {
         KeyIndex.rollbackPrefix(fs, outDir, d, filePrefix)
       }
       fs.delete(staging, true) // leftover from a crashed attempt
-      // one staged file per touched partition per commit: without the
-      // repartition the write emits every upstream partition's sliver
+      // one staged file per touched partition per commit: every staged
+      // write's input is hash-partitioned by date first. Without that
+      // the write emits every upstream partition's sliver
       // into every date dir (micro-batch × 32 tasks = up to 32 files
       // per partition PER COMMIT), and the per-commit rollback/
       // migration listings then grow linearly with commit count — the
@@ -285,12 +287,10 @@ object Streams {
       // over the (small) batch; a genuinely huge micro-batch hashing
       // onto few date keys would raise `filesPerPartition`-style fan-
       // out instead, the same dial Lifecycle.compact exposes.
-      def stagedWrite(df: DataFrame): Unit =
-        df.repartition(col("event_date")).write.mode("overwrite")
-          .partitionBy("event_date")
-          .parquet(staging.toString)
+      def stagedWrite(df: DataFrame, dir: String): Unit =
+        df.write.mode("overwrite").partitionBy("event_date").parquet(dir)
       if (!keyedDedup) {
-        stagedWrite(fresh)
+        stagedWrite(fresh.repartition(col("event_date")), staging.toString)
       } else {
         // keyed mode (the ON CONFLICT DO NOTHING twin): dedup authority
         // is the COMMITTED key sidecar index, not a data read-back.
@@ -324,7 +324,7 @@ object Streams {
           blooms.nonEmpty && !fresh.filter(bloomHit(hashCol)).isEmpty
         val migratedWithDate =
           if (migrating.isEmpty) None
-          else Some(spark.read.parquet(outDir)
+          else Some(Reads.parquet(spark, outDir)
             .filter(col("event_date").isInCollection(migrating.toSeq))
             .select(col("event_date") +: keys.map(col): _*).persist())
         try {
@@ -335,35 +335,34 @@ object Streams {
               .map(_.toString).toSeq
           val existing = Seq(
             if (segmentFiles.nonEmpty)
-              Some(spark.read.parquet(segmentFiles: _*).select(keys.map(col): _*))
+              Some(Reads.parquet(spark, segmentFiles: _*).select(keys.map(col): _*))
             else None,
             migratedWithDate.map(_.select(keys.map(col): _*))
           ).flatten.reduceOption(_ unionByName _)
-          val staged = existing match {
-            case None    => fresh
-            case Some(e) => fresh.join(e, keys, "left_anti")
-          }
-          stagedWrite(staged)
-          // sidecar segment for this commit: the keys it inserts, plus
-          // the migration read-back keys (so the partition is fully
-          // covered the moment this batch's marker lands)
-          val segKeys = (staged.select(col("event_date") +: keys.map(col): _*) +:
-            migratedWithDate.toSeq).reduce(_ unionByName _)
+          // ONE pass: the anti-joined rows are hash-partitioned by date
+          // and pinned, and the data, the key segment and the blooms all
+          // read that copy — each date's rows sit in one partition, so
+          // both writes stay one file per touched date and every date's
+          // bloom is sized and built in the same single job
+          val staged = existing.fold(fresh)(fresh.join(_, keys, "left_anti"))
             .repartition(col("event_date")).persist()
           try {
-            segKeys.write.mode("overwrite").partitionBy("event_date")
-              .parquet(s"$staging/_keyidx")
+            stagedWrite(staged, staging.toString)
+            // sidecar segment for this commit: the keys it inserts, plus
+            // the migration read-back keys (so the partition is fully
+            // covered the moment this batch's marker lands)
+            val inserted = staged.select(col("event_date") +: keys.map(col): _*)
+            val segKeys = migratedWithDate.fold(inserted)(m =>
+              inserted.unionByName(m).repartition(col("event_date")))
+            stagedWrite(segKeys, s"$staging/_keyidx")
             // one bloom per touched partition over that segment's keys,
             // staged beside it (promoted + prefix-named with the rest)
-            val counts = segKeys.groupBy(col("event_date")).count()
-              .collect().map(r => (r.get(0), r.getLong(1)))
-            counts.foreach { case (d, n) =>
-              val bloom = KeyIndex.bloomOf(
-                segKeys.filter(col("event_date") === lit(d)), keys, n)
-              KeyIndex.writeBloom(fs,
-                p(s"$staging/_keyidx/event_date=$d/bloom.bin"), bloom)
-            }
-          } finally segKeys.unpersist()
+            KeyIndex.bloomsByDate(segKeys, col("event_date"), keys)
+              .foreach { case (d, bloom) =>
+                KeyIndex.writeBloom(fs,
+                  p(s"$staging/_keyidx/event_date=$d/bloom.bin"), bloom)
+              }
+          } finally staged.unpersist()
         } finally migratedWithDate.foreach(_.unpersist())
       }
     } finally fresh.unpersist()

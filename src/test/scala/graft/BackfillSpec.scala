@@ -5,6 +5,7 @@ import java.time.LocalDate
 
 import graft.store.Backfill
 import org.apache.hadoop.fs.Path
+import org.apache.spark.graftbridge.JobCounter
 import org.apache.spark.sql.functions._
 
 class BackfillSpec extends SparkSpec {
@@ -69,5 +70,39 @@ class BackfillSpec extends SparkSpec {
       .collect().map(_.toString).sorted
     assert(got.sameElements(expect))
     assert(files(bystander) == bystanderBefore) // untouched partitions keep their files
+  }
+
+  test("A12 refresh overwrites dynamically per write, never through the session conf") {
+    val dir = Files.createTempDirectory("rollup_conf").toString
+    val events = Tables.events(spark, Sf0001)
+    Backfill.materialize(events, dir)
+    val dates = spark.read.parquet(dir).select(col("bucket_date")).distinct()
+      .orderBy(col("bucket_date")).collect().map(_.getDate(0).toLocalDate)
+    val (victim, bystander) = (dates(1), dates(2))
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def files(d: LocalDate): Set[String] =
+      fs.listStatus(new Path(s"$dir/bucket_date=$d")).map(_.getPath.getName).toSet
+    val bystanderBefore = files(bystander)
+    // the caller runs static overwrites; a refresh in flight must not
+    // flip that for the rest of the session (another thread's write
+    // would see `dynamic`, and a concurrent refresh restoring `static`
+    // first would turn this one into a static overwrite). Every job of
+    // the write snapshots the session's SQL confs at submission.
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "static")
+    try {
+      val (_, jobs) = JobCounter.jobsIn(spark.sparkContext)(
+        Backfill.refreshRange(spark, events, dir, victim, victim.plusDays(1)))
+      assert(jobs.nonEmpty)
+      val seen = jobs.map(j => Option(j.properties).map(_.getProperty(key)).orNull)
+      assert(seen.forall(_ == "static"), s"session conf during the write: $seen")
+      assert(spark.conf.get(key) == "static")
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    // and the write itself was still dynamic: untouched partitions keep
+    // their files
+    assert(files(bystander) == bystanderBefore)
+    assert(spark.read.parquet(dir).count() ==
+      Backfill.hourlyRollupPartitioned(events).count())
   }
 }

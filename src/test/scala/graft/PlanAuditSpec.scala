@@ -232,4 +232,25 @@ class PlanAuditSpec extends SparkSpec {
     assert(rungs.last == 8, s"unreachable target must fall back to 8: $rungs")
     graft.store.Checkpoints.free(spark)
   }
+
+  // the interactive ops of the serve benchmark (five dashboard reads,
+  // two retrieval serves): once warm, building their DataFrames is pure
+  // planning — any job here (a schema-inference read, an eager collect,
+  // a store probe) is fixed latency on every request
+  private val zeroJobConstruct = Seq(
+    "a2_hourly_agg", "w1_gap_detection", "o1_recent_readings",
+    "o3_recent_topn", "t10_alerts", "emb_pq_serve", "lex_bm25_serve")
+
+  test("warm construction of the interactive serve ops launches no Spark job") {
+    // first calls build the stores and fill the memos
+    zeroJobConstruct.foreach(n => SparkEntry.queries(n)(spark, Sf0001))
+    val offenders = zeroJobConstruct.flatMap { name =>
+      val (_, jobs) = org.apache.spark.graftbridge.JobCounter.jobsIn(
+        spark.sparkContext)(SparkEntry.queries(name)(spark, Sf0001))
+      if (jobs.isEmpty) None
+      else Some(s"$name: ${jobs.size} jobs at " +
+        jobs.map(org.apache.spark.graftbridge.JobCounter.callSite).mkString(", "))
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
 }

@@ -438,4 +438,41 @@ class StreamingSpec extends SparkSpec {
     assert(live.count() == 5)
     assert(live.select("user_id", "ts").distinct().count() == 5)
   }
+
+  test("keyed commit over two dates: one data and one segment file per date, blooms equal bloomOf") {
+    import spark.implicits._
+    import graft.streaming.KeyIndex
+    val outDir = Files.createTempDirectory("kfused_out").toString
+    val day2 = Seq(
+      EventRow(5, ts("2024-01-02 08:00:00"), 3, "view", 5.0),
+      EventRow(6, ts("2024-01-02 09:30:00"), 4, "click", 6.0))
+    Streams.commitBatch((sampleRows ++ day2).toDF(), outDir, 0)
+    // a second batch: duplicates of both dates plus one new key, so the
+    // anti-join runs against committed segments
+    Streams.commitBatch((sampleRows.take(2) ++ day2 :+
+      EventRow(7, ts("2024-01-02 10:00:00"), 5, "view", 7.0)).toDF(), outDir, 1)
+    val fs = new org.apache.hadoop.fs.Path(outDir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val prefixes = KeyIndex.committedPrefixes(fs, outDir)
+    val keys = Seq("user_id", "ts")
+    Seq(("2024-01-01", 0, sampleRows.size), ("2024-01-02", 0, day2.size),
+        ("2024-01-02", 1, 1)).foreach { case (d, batch, n) =>
+      val prefix = s"batch$batch-"
+      def named(dir: String) = new java.io.File(dir).listFiles()
+        .map(_.getName).filter(_.startsWith(prefix)).toSeq
+      assert(named(s"$outDir/event_date=$d").size == 1, s"$d data files")
+      val segs = KeyIndex.committedKeyFiles(fs, outDir, d, prefixes)
+        .filter(_.getName.startsWith(prefix))
+      assert(segs.size == 1, s"$d batch $batch segments: $segs")
+      val segKeys = spark.read.parquet(segs.map(_.toString): _*)
+      assert(segKeys.count() == n)
+      val want = KeyIndex.bloomOf(segKeys, keys, n).serialize
+      val got = Files.readAllBytes(java.nio.file.Paths.get(
+        s"$outDir/_keyidx/event_date=$d/${prefix}bloom.bin"))
+      assert(got.sameElements(want), s"$d batch $batch bloom")
+    }
+    // batch 1 inserted nothing on the first date: no segment, no bloom
+    assert(!new java.io.File(s"$outDir/_keyidx/event_date=2024-01-01/batch1-bloom.bin").exists())
+    assert(spark.read.parquet(outDir).count() == sampleRows.size + day2.size + 1)
+  }
 }
