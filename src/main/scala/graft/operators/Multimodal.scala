@@ -46,19 +46,17 @@ object Multimodal {
     * profiled-range guards of the lossy-survival audits. -1 on an
     * EMPTY corpus (max aggregates to NULL — getLong would NPE, r17
     * ADVICE #4), which trivially passes every profiled-range check
-    * and yields the correct empty audit. Memoized per canonical path:
-    * the corpora are immutable driver-generated inputs, and the guard
-    * otherwise costs one extra driver job per audit invocation.
+    * and yields the correct empty audit. Memoized per state of the
+    * documents file in `StoreMemo`: the guard otherwise costs one extra
+    * driver job per audit invocation.
     */
-  private val maxIdCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]
-  private def maxDocId(s: SparkSession, dir: String): Long =
-    maxIdCache.computeIfAbsent(
-      new java.io.File(dir).getCanonicalPath,
-      _ => {
-        val row = Tables.documents(s, dir).agg(max(col("doc_id"))).head()
-        if (row.isNullAt(0)) -1L else row.getLong(0)
-      })
+  private[graft] def maxDocId(s: SparkSession, dir: String): Long = {
+    val src = s"$dir/documents.parquet"
+    graft.store.StoreMemo.get(s, s"max-doc-id:$src", Seq(src)) {
+      val row = Tables.documents(s, dir).agg(max(col("doc_id"))).head()
+      if (row.isNullAt(0)) -1L else row.getLong(0)
+    }
+  }
 
   /** A media row: opaque payload + typed metadata (the Spark-side model
     * of an image/audio/video column).

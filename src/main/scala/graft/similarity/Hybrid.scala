@@ -375,30 +375,16 @@ object Hybrid {
     * cannot promise what it never measured). Mirrored verbatim by the
     * oracle's winner ordering.
     */
-  // Dial-manifest rows memoized per (root, dial-dir file state) — the
-  // AnnIndex.dialMemo / panelMemo discipline: the manifest is a tiny
-  // write-once control-plane table and re-reading it was a fixed
-  // driver job on every warm dialed serve. Same staleness window and
-  // SPARK_GRAFT_NO_ROOT_MEMO escape hatch as the other store memos.
-  private val dialMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Seq[(Int, Int, Double, Double)])]()
-
   def resolveHybridRung(s: SparkSession, root: String,
       target: Double): (Int, Int, Double) = {
-    def readRows(): Seq[(Int, Int, Double, Double)] =
+    val rows = graft.store.StoreMemo.get(s, s"hybrid-dial:$root",
+        Seq(s"$root/dial")) {
       Reads.parquet(s, s"$root/dial")
         .select(col("c"), col("rrf_k"), col("w_lex"), col("mean_ndcg"))
         .collect()
         .map(r => (r.getInt(0), r.getInt(1), r.getDouble(2), r.getDouble(3)))
         .toSeq
-    val rows =
-      if (sys.env.get("SPARK_GRAFT_NO_ROOT_MEMO").contains("1")) readRows()
-      else {
-        val state = graft.store.AnnIndex.dialDirState(s, s"$root/dial")
-        dialMemo.compute(s"$root/dial", (_, prev) =>
-          if (prev != null && prev._1 == state) prev
-          else (state, readRows()))._2
-      }
+    }
     require(rows.nonEmpty, s"hybrid store at $root has no dial manifest")
     val byCost = rows.sortBy(r => (r._1, r._2, r._3))
     val pick = byCost.find(_._4 >= target).getOrElse(
@@ -448,6 +434,5 @@ object Hybrid {
 
   private def hybridDialRoot(s: SparkSession,
       dir: String): org.apache.hadoop.fs.Path =
-    graft.store.StoreRoot.rootForCached(s, s"$dir/documents.parquet",
-      "hyd", "1")(Tables.documents(s, dir).count())
+    graft.store.StoreRoot.rootFor(s, s"$dir/documents.parquet", "hyd", "1")
 }

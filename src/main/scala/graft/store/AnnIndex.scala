@@ -55,12 +55,8 @@ object AnnIndex {
   /** Root resolution + publish via the shared `StoreRoot` protocol,
     * keyed on the embeddings table's state.
     */
-  // n is BY-NAME through the memo: a warm serve resolves the root
-  // from (path, mtime, len, kind) without running the count job
-  private def indexRoot(spark: SparkSession, dir: String, kind: String,
-      n: => Long): Path =
-    StoreRoot.rootForCached(spark, s"$dir/embeddings.parquet", kind,
-      FormatVersion)(n)
+  private def indexRoot(spark: SparkSession, dir: String, kind: String): Path =
+    StoreRoot.rootFor(spark, s"$dir/embeddings.parquet", kind, FormatVersion)
 
   private def ensureBuilt(spark: SparkSession, root: Path)(
       build: String => Unit): Unit =
@@ -526,14 +522,14 @@ object AnnIndex {
   def embIvfPqServe(s: SparkSession, dir: String, k: Int = 5,
       nprobe: Int = 2): DataFrame = {
     val emb = Tables.embeddings(s, dir)
-    val root = indexRoot(s, dir, "ivfpq", emb.count())
+    val root = indexRoot(s, dir, "ivfpq")
     ensureBuilt(s, root)(staging => buildIvfPq(emb, staging))
     serveIvfPqTopk(s, root.toString, queryLiterals(s, dir), k, nprobe)
   }
 
   def embIvfPqServeSq8(s: SparkSession, dir: String, k: Int = 5): DataFrame = {
     val emb = Tables.embeddings(s, dir)
-    val root = indexRoot(s, dir, "ivfpq", emb.count())
+    val root = indexRoot(s, dir, "ivfpq")
     ensureBuilt(s, root)(staging => buildIvfPq(emb, staging))
     serveIvfPqTopkSq8(s, root.toString, queryLiterals(s, dir), k)
   }
@@ -819,45 +815,17 @@ object AnnIndex {
 
   // ------------------------------------------------- registered queries
 
-  /** The 10 query vectors as a LITERAL relation (one 10-row collect at
-    * the query boundary): query vectors are runtime INPUT to a serve
-    * path — materializing them keeps the serve plan free of any
-    * embeddings-table scan, which is the property this query family
-    * exists to prove.
+  /** The 10 query vectors as a LITERAL relation (one 10-row collect per
+    * corpus state, memoized in `StoreMemo`): query vectors are runtime
+    * INPUT to a serve path — materializing them keeps the serve plan
+    * free of any embeddings-table scan, which is the property this
+    * query family exists to prove.
     */
-  // The collected panel rows are memoized per corpus-file state (same
-  // key discipline as StoreRoot.rootForCached, including the
-  // SPARK_GRAFT_NO_ROOT_MEMO escape hatch — the memo shares rootMemo's
-  // mtime+len staleness window, so the same env knob must disable
-  // both). The map is keyed by srcFile with the observed state INSIDE
-  // the value: a regenerated corpus replaces its entry instead of
-  // accreting one per file state, so the memo is bounded by the number
-  // of distinct corpus paths, not corpus rewrites (ADVICE r14). The
-  // panel is a pure function of the immutable embeddings file, and
-  // re-collecting it was one fixed driver job on every warm serve
-  // (r13 verdict #2 — the serve rows are latency-bound, cpu/wall ≈ 2
-  // at ~1.5 s wall). Rows are cached, the local relation is rebuilt
-  // per call (cheap, session-correct).
-  private val panelMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Array[org.apache.spark.sql.Row])]()
-
   private def queryLiterals(s: SparkSession, dir: String): DataFrame = {
     val srcFile = s"$dir/embeddings.parquet"
-    val plan = Tables.embeddings(s, dir).filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val rows =
-      if (sys.env.get("SPARK_GRAFT_NO_ROOT_MEMO").contains("1"))
-        plan.collect()
-      else {
-        val p = new Path(srcFile)
-        val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-        val st = fs.getFileStatus(p)
-        val state = s"${st.getModificationTime}|${st.getLen}"
-        panelMemo.compute(srcFile, (_, prev) =>
-          if (prev != null && prev._1 == state) prev
-          else (state, plan.collect()))._2
-      }
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), plan.schema)
+    StoreMemo.rows(s, s"panel:$srcFile", Seq(srcFile))(
+      Tables.embeddings(s, dir).filter(col("vec_id") < 10)
+        .select(col("vec_id").as("query_id"), col("embedding").as("q_emb")))
   }
 
   /** The PQ index root for a corpus dir, built if absent — the handle
@@ -865,7 +833,7 @@ object AnnIndex {
     */
   def ensuredPqRoot(s: SparkSession, dir: String): String = {
     val emb = Tables.embeddings(s, dir)
-    val root = indexRoot(s, dir, "pq", emb.count())
+    val root = indexRoot(s, dir, "pq")
     ensureBuilt(s, root)(staging => buildPq(emb, staging))
     root.toString
   }
@@ -882,7 +850,7 @@ object AnnIndex {
   def embPqServeTombstone(s: SparkSession, dir: String,
       k: Int = 5): DataFrame = {
     val emb = Tables.embeddings(s, dir)
-    val root = indexRoot(s, dir, "pqdel", emb.count())
+    val root = indexRoot(s, dir, "pqdel")
     ensureBuilt(s, root) { staging =>
       buildPq(emb, staging)
       deleteVectors(s, staging,
@@ -902,7 +870,7 @@ object AnnIndex {
   def embPqServeCompacted(s: SparkSession, dir: String,
       k: Int = 5): DataFrame = {
     val emb = Tables.embeddings(s, dir)
-    val root = indexRoot(s, dir, "pqcmp", emb.count())
+    val root = indexRoot(s, dir, "pqcmp")
     ensureBuilt(s, root) { staging =>
       buildPq(emb, staging)
       deleteVectors(s, staging,
@@ -990,7 +958,7 @@ object AnnIndex {
       k: Int = 5, nprobe: Int = 4, label: Int = 3): DataFrame = {
     val emb = Similarity.augmentedEmbeddings(Tables.embeddings(s, dir))
       .withColumn("label", pmod(col("vec_id"), lit(16L)).cast(IntegerType))
-    val root = indexRoot(s, dir, "ivflc", emb.count())
+    val root = indexRoot(s, dir, "ivflc")
     ensureBuilt(s, root)(staging => buildIvfLabeled(emb, staging))
     val q = Similarity.materializeSmall(emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb")))
@@ -1020,7 +988,7 @@ object AnnIndex {
       k: Int = 5): DataFrame = {
     val emb = Similarity.augmentedEmbeddings(Tables.embeddings(s, dir))
       .withColumn("label", pmod(col("vec_id"), lit(16L)).cast(IntegerType))
-    val root = indexRoot(s, dir, "ivfpqc", emb.count())
+    val root = indexRoot(s, dir, "ivfpqc")
     ensureBuilt(s, root)(staging => buildIvfPq(emb, staging))
     val q = Similarity.materializeSmall(emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb")))
@@ -1058,9 +1026,9 @@ object AnnIndex {
     */
   def embIvfCellStats(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)
-    val n = emb.count()
-    val root = indexRoot(s, dir, "ivf", n)
+    val root = indexRoot(s, dir, "ivf")
     ensureBuilt(s, root)(staging => buildIvf(emb, staging))
+    val n = StoreRoot.rowCount(s, s"$dir/embeddings.parquet")
     Reads.parquet(s, s"${root.toString}/lists")
       .groupBy(col("cell").cast(LongType).as("cell"))
       .agg(count(lit(1)).as("n_vecs"))
@@ -1116,7 +1084,7 @@ object AnnIndex {
     */
   def embIvfCellGuard(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)
-    val root = indexRoot(s, dir, "ivf", emb.count())
+    val root = indexRoot(s, dir, "ivf")
     ensureBuilt(s, root)(staging => buildIvf(emb, staging))
     cellGuard(s, root.toString, "lists")
   }
@@ -1233,7 +1201,7 @@ object AnnIndex {
   def embIvfServe(s: SparkSession, dir: String, k: Int = 5,
       nprobe: Int = 2): DataFrame = {
     val emb = Tables.embeddings(s, dir)
-    val root = indexRoot(s, dir, "ivf", emb.count())
+    val root = indexRoot(s, dir, "ivf")
     ensureBuilt(s, root)(staging => buildIvf(emb, staging))
     serveIvfTopk(s, root.toString, queryLiterals(s, dir), k, nprobe)
   }
@@ -1288,37 +1256,14 @@ object AnnIndex {
     * measured rung (the dial's honesty: it cannot promise what the
     * index never measured).
     */
-  // Dial-manifest rows memoized per (root, dial-dir file state) — the
-  // panelMemo discipline (r13): the manifest is a tiny immutable-once-
-  // written control-plane table, and re-reading it was one fixed
-  // driver job on every warm dialed serve. Same staleness window
-  // (mtime+len of the dial dir) and the same SPARK_GRAFT_NO_ROOT_MEMO
-  // escape hatch as the other store memos.
-  private val dialMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Seq[(Long, Double)])]()
-
-  private[graft] def dialDirState(s: SparkSession, dialDir: String): String = {
-    val p = new Path(dialDir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val st = fs.getFileStatus(p)
-    s"${st.getModificationTime}|${fs.listStatus(p).length}"
-  }
-
   def resolveNprobe(s: SparkSession, root: String,
       targetRecall: Double): Int = {
-    def readRows(): Seq[(Long, Double)] =
+    val dial = StoreMemo.get(s, s"ivf-dial:$root", Seq(s"$root/dial")) {
       Reads.parquet(s, s"$root/dial")
         .orderBy(col("nprobe"))
         .select(col("nprobe"), col("mean_recall")).collect()
         .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val dial =
-      if (sys.env.get("SPARK_GRAFT_NO_ROOT_MEMO").contains("1")) readRows()
-      else {
-        val state = dialDirState(s, s"$root/dial")
-        dialMemo.compute(s"$root/dial", (_, prev) =>
-          if (prev != null && prev._1 == state) prev
-          else (state, readRows()))._2
-      }
+    }
     require(dial.nonEmpty, s"index at $root has no dial manifest — " +
       "rebuild with writeIvfDial or serve with an explicit nprobe")
     dial.find(_._2 >= targetRecall).getOrElse(dial.last)._1.toInt
@@ -1341,7 +1286,7 @@ object AnnIndex {
   def embIvfServeDialed(s: SparkSession, dir: String, k: Int = 5,
       targetRecall: Double = 0.5): DataFrame = {
     val emb = Tables.embeddings(s, dir)
-    val root = indexRoot(s, dir, "ivfd", emb.count())
+    val root = indexRoot(s, dir, "ivfd")
     ensureBuilt(s, root) { staging =>
       buildIvf(emb, staging)
       writeIvfDial(s, staging, queryLiterals(s, dir), k)
@@ -1359,7 +1304,7 @@ object AnnIndex {
     */
   def embIvfDialStats(s: SparkSession, dir: String, k: Int = 5): DataFrame = {
     val emb = Tables.embeddings(s, dir)
-    val root = indexRoot(s, dir, "ivfd", emb.count())
+    val root = indexRoot(s, dir, "ivfd")
     ensureBuilt(s, root) { staging =>
       buildIvf(emb, staging)
       writeIvfDial(s, staging, queryLiterals(s, dir), k)
@@ -1403,7 +1348,7 @@ object AnnIndex {
   def embIvfPqServeDialed(s: SparkSession, dir: String, k: Int = 5,
       targetRecall: Double = 0.5): DataFrame = {
     val emb = Tables.embeddings(s, dir)
-    val root = indexRoot(s, dir, "ivfpqd", emb.count())
+    val root = indexRoot(s, dir, "ivfpqd")
     ensureBuilt(s, root) { staging =>
       buildIvfPq(emb, staging)
       writeIvfPqDial(s, emb, staging, queryLiterals(s, dir), k)
@@ -1422,7 +1367,7 @@ object AnnIndex {
   def embIvfServeFilteredDialed(s: SparkSession, dir: String, k: Int = 5,
       targetRecall: Double = 0.5, label: Int = 3): DataFrame = {
     val emb = Tables.embeddings(s, dir)
-    val root = indexRoot(s, dir, "ivfld", emb.count())
+    val root = indexRoot(s, dir, "ivfld")
     ensureBuilt(s, root) { staging =>
       buildIvfLabeled(emb, staging)
       writeIvfDial(s, staging, queryLiterals(s, dir), k,
@@ -1447,7 +1392,7 @@ object AnnIndex {
   def embIvfServeFiltered(s: SparkSession, dir: String, k: Int = 5,
       nprobe: Int = 4, label: Int = 3): DataFrame = {
     val emb = Tables.embeddings(s, dir)
-    val root = indexRoot(s, dir, "ivfl", emb.count())
+    val root = indexRoot(s, dir, "ivfl")
     ensureBuilt(s, root)(staging => buildIvfLabeled(emb, staging))
     serveIvfTopk(s, root.toString, queryLiterals(s, dir), k, nprobe,
       labelEq = Some(label))
@@ -1464,10 +1409,9 @@ object AnnIndex {
   def embIvfAppendServe(s: SparkSession, dir: String, k: Int = 5,
       nprobe: Int = 2): DataFrame = {
     val emb = Tables.embeddings(s, dir)
-    val n = emb.count()
-    val half = n / 2
-    val root = indexRoot(s, dir, "ivfapp", n)
+    val root = indexRoot(s, dir, "ivfapp")
     ensureBuilt(s, root) { staging =>
+      val half = emb.count() / 2
       buildIvf(emb.filter(col("vec_id") < half), staging)
       appendIvf(emb.filter(col("vec_id") >= half), staging)
     }

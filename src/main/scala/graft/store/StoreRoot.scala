@@ -1,98 +1,50 @@
 package graft.store
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.ParquetFooters
 
 /** Shared root-resolution + publish protocol for the persisted stores
-  * (`AnnIndex`, `TextIndex`): one digest recipe and one staging-rename
-  * race rule, so a fix to either never silently misses a store.
+  * (`AnnIndex`, `TextIndex`, the hybrid dial): one digest recipe and
+  * one staging-rename race rule, so a fix to either never silently
+  * misses a store. Roots and index headers are memoized through
+  * [[StoreMemo]], whose scaladoc says when an entry goes stale.
   */
 object StoreRoot {
 
-  /** Stable on-disk root for (source table state, kind, format):
-    * digest over path + row count + file mtime/size, so a regenerated
-    * corpus or a changed build format rebuilds instead of serving
-    * stale artifacts.
+  /** Stable on-disk root for (source table state, kind, format): a
+    * digest over the path, its row count and its file listing, so a
+    * regenerated corpus or a changed build format rebuilds instead of
+    * serving stale artifacts. Memoized per source state in
+    * [[StoreMemo]]; a miss reads the row count from the parquet
+    * footers on the driver, so resolving a root never runs a job.
     */
   def rootFor(spark: SparkSession, srcFile: String, kind: String,
-      n: Long, version: String): Path = {
-    val src = new Path(srcFile)
-    val fs = src.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val st = fs.getFileStatus(src)
-    val digest = java.lang.Long.toHexString(graft.functions.TextHash.hash60(
-      s"$srcFile|$n|${st.getModificationTime}|${st.getLen}|$kind|$version"))
-    new Path(s"$defaultBase/$kind-$digest")
-  }
+      version: String): Path =
+    StoreMemo.get(spark, s"root:$srcFile|$kind|$version", Seq(srcFile)) {
+      val state = StoreMemo.fingerprint(spark, Seq(srcFile))
+      val digest = java.lang.Long.toHexString(graft.functions.TextHash.hash60(
+        s"$srcFile|${rowCount(spark, srcFile)}|$state|$kind|$version"))
+      new Path(s"$defaultBase/$kind-$digest")
+    }
 
-  /** Process-level memo for [[rootFor]] keyed by everything in the
-    * digest EXCEPT the row count: for an immutable source file,
-    * (path, mtime, len, kind, version) determines n, so repeat serves
-    * skip the count() job entirely — the one Spark job a warm
-    * build-once/query-many serve still paid per call (r13 verdict #2:
-    * the serve rows are latency-bound, and the per-call corpus count
-    * was a fixed stage-count tax on every one of them). A corpus
-    * rewrite changes mtime/len and misses the memo, exactly like it
-    * changes [[rootFor]]'s digest.
-    *
-    * Honest staleness delta vs the per-call count (review r14): the
-    * memo's key drops n, so a rewrite that preserves BOTH mtime and
-    * length (an mtime-preserving copy of an equal-length regenerated
-    * file) is served stale where the old path would re-count — but
-    * only when the regenerated corpus ALSO changed its row count;
-    * an equal-rowcount regeneration was served stale by the digest
-    * itself before the memo existed. The window this memo adds is
-    * "mtime-preserved ∧ equal-length ∧ different-rowcount", which no
-    * normal write produces (rewrites bump mtime). Set
-    * SPARK_GRAFT_NO_ROOT_MEMO=1 to force per-call counting back on.
-    */
-  private val rootMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Path]()
-
-  def rootForCached(spark: SparkSession, srcFile: String, kind: String,
-      version: String)(n: => Long): Path = {
-    if (sys.env.get("SPARK_GRAFT_NO_ROOT_MEMO").contains("1"))
-      return rootFor(spark, srcFile, kind, n, version)
-    val src = new Path(srcFile)
-    val fs = src.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val st = fs.getFileStatus(src)
-    val key = s"$srcFile|${st.getModificationTime}|${st.getLen}|$kind|$version"
-    rootMemo.computeIfAbsent(key,
-      _ => rootFor(spark, srcFile, kind, n, version))
-  }
-
-  /** Tiny-artifact localizer (r19, the panel/dial memo discipline
-    * applied to the store MODEL artifacts): codebooks (8×16 codewords),
-    * IVF centroids (one row per coarse cell) and the summed BM25
-    * statistics (one row) are immutable-once-written index headers a
-    * few KB in size, yet every warm serve re-planned a parquet scan —
-    * and, for the stats table, a two-phase aggregate plus a broadcast
-    * build — over them: 2-3 fixed stages per serve on rows whose
-    * cpu/wall ≈ 2 says stage latency, not compute, is the cost (r18
-    * verdict #2). The rows are collected once per (path, directory
-    * mtime + entry count) — append/delete/compaction commits add or
-    * swap files, so any state change re-collects — and rebuilt as a
-    * LITERAL local relation per call (session-correct, same as the
-    * panel memos). Query results are computed per invocation; only the
-    * index header's rows are memoized. SPARK_GRAFT_NO_ROOT_MEMO=1
-    * disables this together with the other store memos.
-    */
-  private val artifactMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, org.apache.spark.sql.types.StructType,
-      Array[org.apache.spark.sql.Row])]()
-
-  def localizedArtifact(spark: SparkSession, path: String)(
-      plan: => org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    if (sys.env.get("SPARK_GRAFT_NO_ROOT_MEMO").contains("1")) return plan
-    val p = new Path(path)
+  /** Rows of a parquet file or directory, summed from its footers. */
+  private[graft] def rowCount(spark: SparkSession, src: String): Long = {
+    val p = new Path(src)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val st = fs.getFileStatus(p)
-    val state = s"${st.getModificationTime}|${fs.listStatus(p).length}"
-    val hit = artifactMemo.compute(path, (_, prev) =>
-      if (prev != null && prev._1 == state) prev
-      else { val df = plan; (state, df.schema, df.collect()) })
-    spark.createDataFrame(java.util.Arrays.asList(hit._3: _*), hit._2)
+    def leaves(p: Path): Seq[org.apache.hadoop.fs.FileStatus] =
+      fs.listStatus(p).toSeq.filterNot(st => StoreMemo.hidden(st.getPath.getName))
+        .flatMap(st => if (st.isDirectory) leaves(st.getPath) else Seq(st))
+    leaves(p).map(ParquetFooters.rowCount(spark, _)).sum
   }
+
+  /** A tiny index header (codebooks, IVF centroids, summed BM25 stats)
+    * as a literal local relation, collected once per state of `path`
+    * through [[StoreMemo]], so a warm serve plans no scan over it.
+    */
+  def localizedArtifact(spark: SparkSession, path: String)(
+      plan: => DataFrame): DataFrame =
+    StoreMemo.rows(spark, s"artifact:$path", Seq(path))(plan)
 
   /** Deterministic per-process scratch root for registered queries
     * that exercise durable pipelines against throwaway trees (the

@@ -38,12 +38,9 @@ object TextIndex {
   /** Root resolution + publish via the shared `StoreRoot` protocol,
     * keyed on the documents table's state.
     */
-  // n is BY-NAME through the memo: a warm serve resolves the root
-  // from (path, mtime, len, kind) without running the count job
-  private def indexRoot(spark: SparkSession, dir: String, n: => Long,
+  private def indexRoot(spark: SparkSession, dir: String,
       kind: String = "lex"): Path =
-    StoreRoot.rootForCached(spark, s"$dir/documents.parquet", kind,
-      FormatVersion)(n)
+    StoreRoot.rootFor(spark, s"$dir/documents.parquet", kind, FormatVersion)
 
   private def ensureBuilt(spark: SparkSession, root: Path)(
       build: String => Unit): Unit =
@@ -196,30 +193,6 @@ object TextIndex {
       postings: DataFrame): DataFrame =
     AnnIndex.minusDeletes(spark, root, postings, "doc_id")
 
-  // Panel-terms memo (r19, the AnnIndex.panelMemo discipline): the
-  // serve's fixed driver job collected the query panel's postings rows
-  // on EVERY warm serve — and because the postings table is sorted by
-  // TERM, the doc_id < 10 filter prunes no row groups, so each collect
-  // re-read the store's largest table end to end. The panel is a pure
-  // function of the store's postings+deletes file state; the collected
-  // rows are memoized per root, invalidated on that state, with the
-  // same SPARK_GRAFT_NO_ROOT_MEMO escape hatch as the other store
-  // memos. The literal relation is rebuilt per call (cheap,
-  // session-correct); query results are still computed per invocation.
-  private val panelMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Array[org.apache.spark.sql.Row])]()
-
-  private def lexStoreState(spark: SparkSession, root: String): String =
-    Seq("postings", "deletes").map { sub =>
-      val p = new Path(s"$root/$sub")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) s"$sub:absent"
-      else {
-        val st = fs.getFileStatus(p)
-        s"$sub:${st.getModificationTime}|${fs.listStatus(p).length}"
-      }
-    }.mkString(";")
-
   /** BM25 top-k from the persisted index: the query panel's terms come
     * from its own postings rows (doc_id < 10), candidates from the
     * postings join on term — the identical arithmetic (and literals)
@@ -248,19 +221,14 @@ object TextIndex {
     // ONE collect feeds both the literal panel relation and the term
     // literals (r14: the separate distinct().collect() was a second
     // driver job on every warm serve — pure stage-count latency), and
-    // the collected rows are memoized per root state (r19, see
-    // panelMemo above) so a warm serve runs ZERO panel jobs.
+    // the collected rows are memoized per postings+deletes state in
+    // `StoreMemo` (the postings table is sorted by term, so the
+    // doc_id < 10 filter prunes nothing and each collect re-read the
+    // whole table) so a warm serve runs ZERO panel jobs.
     val panelPlan = postings.filter(col("doc_id") < 10)
       .select(col("doc_id").as("query_id"), col("tok"))
-    val qtRows =
-      if (sys.env.get("SPARK_GRAFT_NO_ROOT_MEMO").contains("1"))
-        panelPlan.collect()
-      else {
-        val state = lexStoreState(spark, root)
-        panelMemo.compute(root, (_, prev) =>
-          if (prev != null && prev._1 == state) prev
-          else (state, panelPlan.collect()))._2
-      }
+    val qtRows = StoreMemo.get(spark, s"lex-panel:$root",
+      Seq(s"$root/postings", s"$root/deletes"))(panelPlan.collect())
     val qt = spark.createDataFrame(
       java.util.Arrays.asList(qtRows: _*), panelPlan.schema)
     // sorted: collect order is partition-arrival nondeterministic, and
@@ -305,7 +273,7 @@ object TextIndex {
   /** The lexical index root for a corpus dir, built if absent. */
   def ensuredRoot(s: SparkSession, dir: String): String = {
     val docs = Tables.documents(s, dir)
-    val root = indexRoot(s, dir, docs.count())
+    val root = indexRoot(s, dir)
     ensureBuilt(s, root)(staging => build(docs, staging))
     root.toString
   }
@@ -323,10 +291,9 @@ object TextIndex {
   def lexBm25AppendServe(s: SparkSession, dir: String,
       k: Int = 5): DataFrame = {
     val docs = Tables.documents(s, dir)
-    val n = docs.count()
-    val half = n / 2
-    val root = indexRoot(s, dir, n, "lexapp")
+    val root = indexRoot(s, dir, "lexapp")
     ensureBuilt(s, root) { staging =>
+      val half = docs.count() / 2
       build(docs.filter(col("doc_id") < half), staging)
       appendBatch(docs.filter(col("doc_id") >= half), staging, 0L)
     }
@@ -343,7 +310,7 @@ object TextIndex {
   def lexBm25ServeTombstone(s: SparkSession, dir: String,
       k: Int = 5): DataFrame = {
     val docs = Tables.documents(s, dir)
-    val root = indexRoot(s, dir, docs.count(), "lexdel")
+    val root = indexRoot(s, dir, "lexdel")
     ensureBuilt(s, root) { staging =>
       build(docs, staging)
       deleteDocs(s, staging,
@@ -364,10 +331,9 @@ object TextIndex {
   def lexBm25CompactServe(s: SparkSession, dir: String,
       k: Int = 5): DataFrame = {
     val docs = Tables.documents(s, dir)
-    val n = docs.count()
-    val half = n / 2
-    val root = indexRoot(s, dir, n, "lexcmp")
+    val root = indexRoot(s, dir, "lexcmp")
     ensureBuilt(s, root) { staging =>
+      val half = docs.count() / 2
       build(docs.filter(col("doc_id") < half), staging)
       appendBatch(docs.filter(col("doc_id") >= half), staging, 0L)
       Compaction.compactLexStore(s, staging)

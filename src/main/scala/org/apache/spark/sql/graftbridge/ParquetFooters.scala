@@ -1,5 +1,7 @@
 package org.apache.spark.sql.graftbridge
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.FileStatus
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.Footer
@@ -10,7 +12,8 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.HadoopFSUtils
 
 /** The pieces of Spark's parquet schema inference that `graft.Reads`
-  * runs on the driver instead of in a one-task job. Spark keeps them
+  * runs on the driver instead of in a one-task job, and the footer row
+  * counts `StoreRoot.rootFor` digests. Spark keeps them
   * package-private; this shim sits under org.apache.spark.sql solely
   * for access, like `ColumnBridge`.
   */
@@ -34,5 +37,12 @@ object ParquetFooters {
       HadoopInputFile.fromStatus(file, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
     ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, meta),
       new ParquetToSparkSchemaConverter(state.conf))
+  }
+
+  /** Rows in one parquet file, summed over its footer's row groups. */
+  def rowCount(spark: SparkSession, file: FileStatus): Long = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(file, conf),
+      ParquetMetadataConverter.NO_FILTER).getBlocks.asScala.map(_.getRowCount).sum
   }
 }

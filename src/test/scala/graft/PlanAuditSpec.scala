@@ -234,12 +234,14 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   // the interactive ops of the serve benchmark (five dashboard reads,
-  // two retrieval serves): once warm, building their DataFrames is pure
-  // planning — any job here (a schema-inference read, an eager collect,
-  // a store probe) is fixed latency on every request
+  // two retrieval serves) and the store ops whose root no longer takes
+  // a count: once warm, building their DataFrames is pure planning —
+  // any job here (a schema-inference read, an eager collect, a store
+  // probe) is fixed latency on every request
   private val zeroJobConstruct = Seq(
     "a2_hourly_agg", "w1_gap_detection", "o1_recent_readings",
-    "o3_recent_topn", "t10_alerts", "emb_pq_serve", "lex_bm25_serve")
+    "o3_recent_topn", "t10_alerts", "emb_pq_serve", "lex_bm25_serve",
+    "emb_ivf_cell_stats", "lex_bm25_append_serve", "lex_bm25_compact_serve")
 
   test("warm construction of the interactive serve ops launches no Spark job") {
     // first calls build the stores and fill the memos
