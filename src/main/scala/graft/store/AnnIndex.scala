@@ -52,15 +52,19 @@ object AnnIndex {
     */
   private val FormatVersion = "v4"
 
-  /** Root resolution + publish via the shared `StoreRoot` protocol,
-    * keyed on the embeddings table's state.
+  /** The `kind` root for a corpus dir — resolved and published via the
+    * shared `StoreRoot` protocol, keyed on the embeddings table's
+    * state — built if absent by `build(embeddings, staging)`. The table
+    * is read only inside the build, so a warm call pays no footer read.
     */
-  private def indexRoot(spark: SparkSession, dir: String, kind: String): Path =
-    StoreRoot.rootFor(spark, s"$dir/embeddings.parquet", kind, FormatVersion)
-
-  private def ensureBuilt(spark: SparkSession, root: Path)(
-      build: String => Unit): Unit =
-    StoreRoot.ensureBuilt(spark, root)(build)
+  private def ensuredRoot(spark: SparkSession, dir: String, kind: String)(
+      build: (DataFrame, String) => Unit): String = {
+    val root = StoreRoot.rootFor(spark, s"$dir/embeddings.parquet", kind,
+      FormatVersion)
+    StoreRoot.ensureBuilt(spark, root)(staging =>
+      build(Tables.embeddings(spark, dir), staging))
+    root.toString
+  }
 
   // ---------------------------------------------------------------- PQ
 
@@ -106,66 +110,99 @@ object AnnIndex {
     emb.select(col("vec_id"), col("label")).write.parquet(s"$path/attrs")
   }
 
-  /** ADC top-k from the persisted PQ index: per query a broadcast LUT
-    * of dot(q_subspace, codeword); a vector's approximate dot is the
-    * sum of its m code lookups; rank by approximate cosine with the
-    * build-time norms. The scan side reads CODES ONLY — m small ints
-    * per vector, the 64×-compressed relation that makes a cluster-RAM
-    * ANN scan possible at 100 TB — plus the (vec_id → vnorm) join.
+  /** The per-query ADC lookup table, built on the driver: one row per
+    * (query, subspace, codeword) with dot(q_subspace, codeword) and the
+    * query's norm — panel × m × 16 rows from the localized codebooks
+    * and the query panel's rows. Computed with `TextHash.dotProduct`,
+    * the fold `Similarity.dot` runs in a plan, so every value is
+    * bit-identical to the in-plan math. It enters the plan as a local
+    * relation (a broadcast leaf), never as literals: AQE re-prints a
+    * plan's literals on every plan update.
     */
-  /** The ADC candidate stage shared by both PQ serves: per-query
-    * broadcast LUT over the stored codebooks, approximate cosine per
-    * vector from m code lookups + build-time norms.
+  private def adcLut(spark: SparkSession, root: String,
+      queries: DataFrame): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import graft.functions.TextHash
+    val (cwSchema, cw) = StoreRoot.localizedRows(spark, s"$root/codebooks")(
+      Reads.parquet(spark, s"$root/codebooks"))
+    val q = queries.select(col("query_id"), col("q_emb"))
+    def isFloat(t: DataType) = t match {
+      case ArrayType(FloatType, _) => true
+      case _ => false
+    }
+    val (qf, cf) = (isFloat(q.schema("q_emb").dataType),
+      isFloat(cwSchema("cw").dataType))
+    def arr(v: scala.collection.Seq[Any]) = new GenericArrayData(v.toArray)
+    val rows = q.collect().toSeq.flatMap { qr =>
+      val qv = qr.getSeq[Any](1)
+      val qnorm = math.sqrt(TextHash.dotProduct(arr(qv), arr(qv), qf, qf))
+      cw.map { c =>
+        val s = c.getAs[Number]("s").intValue
+        val w = c.getAs[scala.collection.Seq[Any]]("cw")
+        val qsub = qv.slice(s * w.length, (s + 1) * w.length)
+        Row(qr.get(0), c.getAs[Any]("s"), c.getAs[Any]("code"),
+          TextHash.dotProduct(arr(qsub), arr(w), qf, cf), qnorm)
+      }
+    }
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(
+      q.schema("query_id"), cwSchema("s"), cwSchema("code"),
+      StructField("part", DoubleType), StructField("qnorm", DoubleType))))
+  }
+
+  /** The ADC candidate stage shared by every PQ serve, one exchange on
+    * the item key: the code scan (minus tombstones) is repartitioned by
+    * `vec_id`, joins the driver-built LUT (on `query_id` too when the
+    * codes carry an IVF route), and sums each (query, vector)'s m
+    * lookups inside that partitioning — no second exchange. Approximate
+    * cosine from the summed dot, the LUT's query norm and the
+    * build-time `vnorms`. Callers merge with one exchange on
+    * `query_id` (partial top-k per partition, then the merge).
     */
-  private def pqAdcApprox(spark: SparkSession, root: String,
-      queries: DataFrame,
-      keepIds: Option[DataFrame] = None): DataFrame = {
+  private def adcApprox(spark: SparkSession, root: String,
+      queries: DataFrame, codes: DataFrame): DataFrame = {
+    val keys = Seq("query_id").filter(codes.columns.contains) ++ Seq("s", "code")
+    minusDeletes(spark, root, codes, "vec_id")
+      .repartition(col("vec_id"))
+      .join(broadcast(adcLut(spark, root, queries)), keys)
+      .filter(col("vec_id") =!= col("query_id"))
+      .groupBy(col("query_id"), col("vec_id"))
+      .agg(sum(col("part")).as("raw_dot"), max(col("qnorm")).as("qnorm"))
+      .join(Reads.parquet(spark, s"$root/vnorms"), Seq("vec_id"))
+      .select(col("query_id"), col("vec_id"),
+        round(col("raw_dot") / (col("qnorm") * col("vnorm")), 6).as("pq_cos"))
+  }
+
+  /** Per-query top-k of a (query_id, `id`, `score`) candidate stream:
+    * a partial top-k per partition, one exchange on `query_id`, the
+    * merge; rows are (query_id, neighbor_id, `score`, rank).
+    */
+  private def topkRows(cand: DataFrame, id: String, score: String,
+      k: Int): DataFrame = {
+    val topk = udaf(new TopKByCos(k))
+    cand.groupBy(col("query_id"))
+      .agg(topk(col(id), col(score)).as("nbrs"))
+      .select(col("query_id"), posexplode(col("nbrs")).as(Seq("pos", "nbr")))
+      .select(col("query_id"),
+        col("nbr.neighbor_id").as("neighbor_id"),
+        col("nbr.cos_sim").as(score),
+        (col("pos") + 1).cast(LongType).as("rank"))
+  }
+
+  /** ADC top-k from the persisted PQ index: the scan side reads CODES
+    * ONLY — m small ints per vector, the 64×-compressed relation that
+    * makes a cluster-RAM ANN scan possible at 100 TB — ranked by
+    * approximate cosine with the build-time norms.
+    */
+  def servePqTopk(spark: SparkSession, root: String, queries: DataFrame,
+      k: Int = 5, keepIds: Option[DataFrame] = None): DataFrame = {
     // PRE-filter (the filtered-vector-search discipline): restrict the
     // candidate set before any scoring, so a selective predicate can
     // never starve the top-k the way post-filtering a fixed-size
     // result list does
     val codes = keepIds.foldLeft(Reads.parquet(spark, s"$root/codes"))(
       (c, keep) => c.join(keep, Seq("vec_id"), "left_semi"))
-    // codebooks are a 8×16-codeword index header — localized per store
-    // state (r19, StoreRoot.localizedArtifact) so a warm serve's LUT
-    // build is driver-local instead of a parquet scan + broadcast job.
-    // vnorms stay distributed: one row per vector, linear in n.
-    val cw = StoreRoot.localizedArtifact(spark, s"$root/codebooks")(
-      Reads.parquet(spark, s"$root/codebooks"))
-    val vnorms = Reads.parquet(spark, s"$root/vnorms")
-    val lut = queries
-      .select(col("query_id"), explode(sequence(lit(0), lit(7))).as("s"),
-        col("q_emb"))
-      .select(col("query_id"), col("s"),
-        slice(col("q_emb"), col("s") * 8 + 1, lit(8)).as("qsub"))
-      .join(broadcast(cw), Seq("s"))
-      .select(col("query_id"), col("s"), col("code"),
-        Similarity.dot(col("qsub"), col("cw")).as("part"))
-    val qnorm = queries.select(col("query_id"),
-      sqrt(Similarity.dot(col("q_emb"), col("q_emb"))).as("qnorm"))
-    minusDeletes(spark, root,
-      codes.join(broadcast(lut), Seq("s", "code"))
-        .filter(col("vec_id") =!= col("query_id"))
-        .groupBy(col("query_id"), col("vec_id"))
-        .agg(sum(col("part")).as("raw_dot"))
-        .join(vnorms, Seq("vec_id"))
-        .join(broadcast(qnorm), Seq("query_id"))
-        .select(col("query_id"), col("vec_id"),
-          round(col("raw_dot") / (col("qnorm") * col("vnorm")), 6).as("pq_cos")),
-      "vec_id")
-  }
-
-  def servePqTopk(spark: SparkSession, root: String, queries: DataFrame,
-      k: Int = 5, keepIds: Option[DataFrame] = None): DataFrame = {
-    val topk = udaf(new TopKByCos(k))
-    pqAdcApprox(spark, root, queries, keepIds)
-      .groupBy(col("query_id"))
-      .agg(topk(col("vec_id"), col("pq_cos")).as("nbrs"))
-      .select(col("query_id"), posexplode(col("nbrs")).as(Seq("pos", "nbr")))
-      .select(col("query_id"),
-        col("nbr.neighbor_id").as("neighbor_id"),
-        col("nbr.cos_sim").as("pq_cos"),
-        (col("pos") + 1).cast(LongType).as("rank"))
+    topkRows(adcApprox(spark, root, queries, codes), "vec_id", "pq_cos", k)
     // no final orderBy (r19, guide §2.4): a global sort of ≤ panel×k
     // rows is a rangepartitioning Exchange + Sort — two stage round
     // trips of pure latency on every serve. The oracle gate hashes
@@ -186,7 +223,9 @@ object AnnIndex {
     */
   def servePqTopkSq8(spark: SparkSession, root: String, queries: DataFrame,
       k: Int = 5, cut: Int = 64): DataFrame =
-    sq8Rescore(spark, root, pqAdcApprox(spark, root, queries), queries, k, cut)
+    sq8Rescore(spark, root,
+      adcApprox(spark, root, queries, Reads.parquet(spark, s"$root/codes")),
+      queries, k, cut)
 
   /** The SQ8 rescore stage shared by the flat-PQ and IVFPQ two-tier
     * serves: top-`cut` ADC candidates rescored by the symmetric int8
@@ -352,26 +391,7 @@ object AnnIndex {
     */
   def serveIvfTopk(spark: SparkSession, root: String, queries: DataFrame,
       k: Int = 5, nprobe: Int = 2, labelEq: Option[Int] = None): DataFrame = {
-    // centroids are a one-row-per-cell index header — localized per
-    // store state (r19) so the route job runs over local relations
-    // instead of re-scanning the centroid parquet on every warm serve
-    val cent = StoreRoot.localizedArtifact(spark, s"$root/centroids")(
-      Reads.parquet(spark, s"$root/centroids"))
-    val qc = queries.crossJoin(broadcast(cent))
-      .select(col("query_id"), col("q_emb"), col("cell"),
-        round(Similarity.cosine(col("q_emb"), col("centroid")), 6).as("cos_c"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id")).orderBy(col("cos_c").desc, col("cell"))
-    // ONE collect feeds the literal route relation AND the pruning
-    // literals (r14: the separate distinct().collect() was a second
-    // driver job per warm serve — pure stage-count latency)
-    val (probedRows, probed) = Similarity.materializeRows(
-      qc.withColumn("r", row_number().over(w)).filter(col("r") <= nprobe)
-        .select(col("query_id"), col("q_emb"), col("cell")))
-    // sorted: these become partition-pruning IN literals — stable
-    // order keeps the generated plan source codegen-cache-friendly
-    val routedCells = probedRows
-      .map(_.getAs[Number]("cell").longValue).toSeq.distinct.sorted
+    val (routedCells, probed) = routeQueries(spark, root, queries, nprobe)
     val lists0 = minusDeletes(spark, root,
       routedScan(spark, root, "lists", routedCells), "vec_id")
     // filtered serve: the metadata predicate evaluates INSIDE the
@@ -386,15 +406,31 @@ object AnnIndex {
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         round(Similarity.cosine(col("q_emb"), col("embedding")), 6).as("cos_sim"))
-    val topk = udaf(new TopKByCos(k))
-    cand.groupBy(col("query_id"))
-      .agg(topk(col("neighbor_id"), col("cos_sim")).as("nbrs"))
-      .select(col("query_id"), posexplode(col("nbrs")).as(Seq("pos", "nbr")))
-      .select(col("query_id"),
-        col("nbr.neighbor_id").as("neighbor_id"),
-        col("nbr.cos_sim").as("cos_sim"),
-        (col("pos") + 1).cast(LongType).as("rank"))
+    topkRows(cand, "neighbor_id", "cos_sim", k)
     // no final orderBy — see servePqTopk (r19)
+  }
+
+  /** Route each query to its `nprobe` nearest cells by centroid cosine.
+    * The centroids are a one-row-per-cell index header, localized per
+    * store state (r19). ONE collect feeds the literal (query_id, q_emb,
+    * cell) route relation AND the partition-pruning literals (r14: a
+    * separate distinct().collect() was a second driver job per warm
+    * serve); the literals are sorted so the generated plan source stays
+    * codegen-cache-friendly.
+    */
+  private def routeQueries(spark: SparkSession, root: String,
+      queries: DataFrame, nprobe: Int): (Seq[Long], DataFrame) = {
+    val cent = StoreRoot.localizedArtifact(spark, s"$root/centroids")(
+      Reads.parquet(spark, s"$root/centroids"))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("query_id")).orderBy(col("cos_c").desc, col("cell"))
+    val (rows, probed) = Similarity.materializeRows(
+      queries.crossJoin(broadcast(cent))
+        .select(col("query_id"), col("q_emb"), col("cell"),
+          round(Similarity.cosine(col("q_emb"), col("centroid")), 6).as("cos_c"))
+        .withColumn("r", row_number().over(w)).filter(col("r") <= nprobe)
+        .select(col("query_id"), col("q_emb"), col("cell")))
+    (rows.map(_.getAs[Number]("cell").longValue).toSeq.distinct.sorted, probed)
   }
 
   // -------------------------------------------------------------- IVFPQ
@@ -442,71 +478,19 @@ object AnnIndex {
     * the cell-count ladder at build time, same as every quantizer
     * here.
     */
-  /** The routed ADC candidate stage shared by the plain IVFPQ serve
-    * and its two-tier rescored twin.
-    */
   private def ivfPqAdcApprox(spark: SparkSession, root: String,
       queries: DataFrame, nprobe: Int): DataFrame = {
-    // centroids + codebooks localized per store state (r19, see
-    // serveIvfTopk / pqAdcApprox); vnorms stay distributed (linear in n)
-    val cent = StoreRoot.localizedArtifact(spark, s"$root/centroids")(
-      Reads.parquet(spark, s"$root/centroids"))
-    val cw = StoreRoot.localizedArtifact(spark, s"$root/codebooks")(
-      Reads.parquet(spark, s"$root/codebooks"))
-    val vnorms = Reads.parquet(spark, s"$root/vnorms")
-    val qc = queries.crossJoin(broadcast(cent))
-      .select(col("query_id"), col("q_emb"), col("cell"),
-        round(Similarity.cosine(col("q_emb"), col("centroid")), 6).as("cos_c"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id")).orderBy(col("cos_c").desc, col("cell"))
-    // ONE collect for route relation + pruning literals (see
-    // serveIvfTopk — same fused shape)
-    val (probedRows, probed) = Similarity.materializeRows(
-      qc.withColumn("r", row_number().over(w)).filter(col("r") <= nprobe)
-        .select(col("query_id"), col("cell")))
-    // sorted: these become partition-pruning IN literals — stable
-    // order keeps the generated plan source codegen-cache-friendly
-    val routedCells = probedRows
-      .map(_.getAs[Number]("cell").longValue).toSeq.distinct.sorted
+    val (routedCells, probed) = routeQueries(spark, root, queries, nprobe)
     val codes = routedScan(spark, root, "cellcodes", routedCells)
-    val lut = queries
-      .select(col("query_id"), explode(sequence(lit(0), lit(7))).as("s"),
-        col("q_emb"))
-      .select(col("query_id"), col("s"),
-        slice(col("q_emb"), col("s") * 8 + 1, lit(8)).as("qsub"))
-      .join(broadcast(cw), Seq("s"))
-      .select(col("query_id"), col("s"), col("code"),
-        Similarity.dot(col("qsub"), col("cw")).as("part"))
-    val qnorm = queries.select(col("query_id"),
-      sqrt(Similarity.dot(col("q_emb"), col("q_emb"))).as("qnorm"))
-    minusDeletes(spark, root,
-      codes
-        .join(broadcast(probed.withColumn("cell", col("cell").cast(LongType))),
-          Seq("cell"))
-        .join(broadcast(lut), Seq("query_id", "s", "code"))
-        .filter(col("vec_id") =!= col("query_id"))
-        .groupBy(col("query_id"), col("vec_id"))
-        .agg(sum(col("part")).as("raw_dot"))
-        .join(vnorms, Seq("vec_id"))
-        .join(broadcast(qnorm), Seq("query_id"))
-        .select(col("query_id"), col("vec_id"),
-          round(col("raw_dot") / (col("qnorm") * col("vnorm")), 6).as("pq_cos")),
-      "vec_id")
+      .join(broadcast(probed.select(col("query_id"),
+        col("cell").cast(LongType).as("cell"))), Seq("cell"))
+    adcApprox(spark, root, queries, codes)
   }
 
   def serveIvfPqTopk(spark: SparkSession, root: String, queries: DataFrame,
-      k: Int = 5, nprobe: Int = 2): DataFrame = {
-    val topk = udaf(new TopKByCos(k))
-    ivfPqAdcApprox(spark, root, queries, nprobe)
-      .groupBy(col("query_id"))
-      .agg(topk(col("vec_id"), col("pq_cos")).as("nbrs"))
-      .select(col("query_id"), posexplode(col("nbrs")).as(Seq("pos", "nbr")))
-      .select(col("query_id"),
-        col("nbr.neighbor_id").as("neighbor_id"),
-        col("nbr.cos_sim").as("pq_cos"),
-        (col("pos") + 1).cast(LongType).as("rank"))
+      k: Int = 5, nprobe: Int = 2): DataFrame =
+    topkRows(ivfPqAdcApprox(spark, root, queries, nprobe), "vec_id", "pq_cos", k)
     // no final orderBy — see servePqTopk (r19)
-  }
 
   /** The composed index's TWO-TIER serve — the full FAISS
     * IVFPQ+refine shape: routed, partition-pruned ADC cut of `cut`
@@ -521,17 +505,13 @@ object AnnIndex {
 
   def embIvfPqServe(s: SparkSession, dir: String, k: Int = 5,
       nprobe: Int = 2): DataFrame = {
-    val emb = Tables.embeddings(s, dir)
-    val root = indexRoot(s, dir, "ivfpq")
-    ensureBuilt(s, root)(staging => buildIvfPq(emb, staging))
-    serveIvfPqTopk(s, root.toString, queryLiterals(s, dir), k, nprobe)
+    val root = ensuredRoot(s, dir, "ivfpq")(buildIvfPq(_, _))
+    serveIvfPqTopk(s, root, queryLiterals(s, dir), k, nprobe)
   }
 
   def embIvfPqServeSq8(s: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    val emb = Tables.embeddings(s, dir)
-    val root = indexRoot(s, dir, "ivfpq")
-    ensureBuilt(s, root)(staging => buildIvfPq(emb, staging))
-    serveIvfPqTopkSq8(s, root.toString, queryLiterals(s, dir), k)
+    val root = ensuredRoot(s, dir, "ivfpq")(buildIvfPq(_, _))
+    serveIvfPqTopkSq8(s, root, queryLiterals(s, dir), k)
   }
 
   // ----------------------------------------------------------- deletes
@@ -831,12 +811,8 @@ object AnnIndex {
   /** The PQ index root for a corpus dir, built if absent — the handle
     * introspection (store.Manifest) shares with the serves.
     */
-  def ensuredPqRoot(s: SparkSession, dir: String): String = {
-    val emb = Tables.embeddings(s, dir)
-    val root = indexRoot(s, dir, "pq")
-    ensureBuilt(s, root)(staging => buildPq(emb, staging))
-    root.toString
-  }
+  def ensuredPqRoot(s: SparkSession, dir: String): String =
+    ensuredRoot(s, dir, "pq")(buildPq(_, _))
 
   def embPqServe(s: SparkSession, dir: String, k: Int = 5): DataFrame =
     servePqTopk(s, ensuredPqRoot(s, dir), queryLiterals(s, dir), k)
@@ -849,14 +825,12 @@ object AnnIndex {
     */
   def embPqServeTombstone(s: SparkSession, dir: String,
       k: Int = 5): DataFrame = {
-    val emb = Tables.embeddings(s, dir)
-    val root = indexRoot(s, dir, "pqdel")
-    ensureBuilt(s, root) { staging =>
+    val root = ensuredRoot(s, dir, "pqdel") { (emb, staging) =>
       buildPq(emb, staging)
       deleteVectors(s, staging,
         emb.filter(col("vec_id") % 17 === 3).select(col("vec_id")))
     }
-    servePqTopk(s, root.toString, queryLiterals(s, dir), k)
+    servePqTopk(s, root, queryLiterals(s, dir), k)
   }
 
   /** The FOLD-COMPACTED tombstone path as a registered, oracle-gated
@@ -869,15 +843,13 @@ object AnnIndex {
     */
   def embPqServeCompacted(s: SparkSession, dir: String,
       k: Int = 5): DataFrame = {
-    val emb = Tables.embeddings(s, dir)
-    val root = indexRoot(s, dir, "pqcmp")
-    ensureBuilt(s, root) { staging =>
+    val root = ensuredRoot(s, dir, "pqcmp") { (emb, staging) =>
       buildPq(emb, staging)
       deleteVectors(s, staging,
         emb.filter(col("vec_id") % 17 === 3).select(col("vec_id")))
       Compaction.compactPqStore(s, staging)
     }
-    servePqTopk(s, root.toString, queryLiterals(s, dir), k)
+    servePqTopk(s, root, queryLiterals(s, dir), k)
   }
 
   /** FILTERED serve — the metadata-constrained vector search every
@@ -958,14 +930,13 @@ object AnnIndex {
       k: Int = 5, nprobe: Int = 4, label: Int = 3): DataFrame = {
     val emb = Similarity.augmentedEmbeddings(Tables.embeddings(s, dir))
       .withColumn("label", pmod(col("vec_id"), lit(16L)).cast(IntegerType))
-    val root = indexRoot(s, dir, "ivflc")
-    ensureBuilt(s, root)(staging => buildIvfLabeled(emb, staging))
+    val root = ensuredRoot(s, dir, "ivflc")((_, st) => buildIvfLabeled(emb, st))
     val q = Similarity.materializeSmall(emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb")))
     val exact = Similarity.embTopkDf(emb, k,
       candPred = Some(col("label") === lit(label)))
     recallCensus(exact,
-      serveIvfTopk(s, root.toString, q, k, nprobe, labelEq = Some(label)), k)
+      serveIvfTopk(s, root, q, k, nprobe, labelEq = Some(label)), k)
   }
 
   /** The same composed-index audit on ANN's OPERATING geometry. The
@@ -988,12 +959,11 @@ object AnnIndex {
       k: Int = 5): DataFrame = {
     val emb = Similarity.augmentedEmbeddings(Tables.embeddings(s, dir))
       .withColumn("label", pmod(col("vec_id"), lit(16L)).cast(IntegerType))
-    val root = indexRoot(s, dir, "ivfpqc")
-    ensureBuilt(s, root)(staging => buildIvfPq(emb, staging))
+    val root = ensuredRoot(s, dir, "ivfpqc")((_, st) => buildIvfPq(emb, st))
     val q = Similarity.materializeSmall(emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb")))
     recallCensus(Similarity.embTopkDf(emb, k),
-      serveIvfPqTopk(s, root.toString, q, k), k)
+      serveIvfPqTopk(s, root, q, k), k)
   }
 
   /** Per-query overlap census of a served top-k against the exact
@@ -1025,11 +995,9 @@ object AnnIndex {
     * the ANN store.
     */
   def embIvfCellStats(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(s, dir)
-    val root = indexRoot(s, dir, "ivf")
-    ensureBuilt(s, root)(staging => buildIvf(emb, staging))
+    val root = ensuredRoot(s, dir, "ivf")(buildIvf(_, _))
     val n = StoreRoot.rowCount(s, s"$dir/embeddings.parquet")
-    Reads.parquet(s, s"${root.toString}/lists")
+    Reads.parquet(s, s"${root}/lists")
       .groupBy(col("cell").cast(LongType).as("cell"))
       .agg(count(lit(1)).as("n_vecs"))
       .select(col("cell"), col("n_vecs"),
@@ -1083,10 +1051,8 @@ object AnnIndex {
     * bound the gate corpus lands on.
     */
   def embIvfCellGuard(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(s, dir)
-    val root = indexRoot(s, dir, "ivf")
-    ensureBuilt(s, root)(staging => buildIvf(emb, staging))
-    cellGuard(s, root.toString, "lists")
+    val root = ensuredRoot(s, dir, "ivf")(buildIvf(_, _))
+    cellGuard(s, root, "lists")
   }
 
   /** CENSUS-TRIGGERED REBUILD — the RETRAINING counterpart to the
@@ -1200,10 +1166,8 @@ object AnnIndex {
 
   def embIvfServe(s: SparkSession, dir: String, k: Int = 5,
       nprobe: Int = 2): DataFrame = {
-    val emb = Tables.embeddings(s, dir)
-    val root = indexRoot(s, dir, "ivf")
-    ensureBuilt(s, root)(staging => buildIvf(emb, staging))
-    serveIvfTopk(s, root.toString, queryLiterals(s, dir), k, nprobe)
+    val root = ensuredRoot(s, dir, "ivf")(buildIvf(_, _))
+    serveIvfTopk(s, root, queryLiterals(s, dir), k, nprobe)
   }
 
   /** NPROBE DIAL (r16 verdict #7): both recall rungs were measured but
@@ -1285,13 +1249,11 @@ object AnnIndex {
     */
   def embIvfServeDialed(s: SparkSession, dir: String, k: Int = 5,
       targetRecall: Double = 0.5): DataFrame = {
-    val emb = Tables.embeddings(s, dir)
-    val root = indexRoot(s, dir, "ivfd")
-    ensureBuilt(s, root) { staging =>
+    val root = ensuredRoot(s, dir, "ivfd") { (emb, staging) =>
       buildIvf(emb, staging)
       writeIvfDial(s, staging, queryLiterals(s, dir), k)
     }
-    serveIvfTopkDialed(s, root.toString, queryLiterals(s, dir), k,
+    serveIvfTopkDialed(s, root, queryLiterals(s, dir), k,
       targetRecall)
   }
 
@@ -1303,13 +1265,11 @@ object AnnIndex {
     * serve (order-independent within a session).
     */
   def embIvfDialStats(s: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    val emb = Tables.embeddings(s, dir)
-    val root = indexRoot(s, dir, "ivfd")
-    ensureBuilt(s, root) { staging =>
+    val root = ensuredRoot(s, dir, "ivfd") { (emb, staging) =>
       buildIvf(emb, staging)
       writeIvfDial(s, staging, queryLiterals(s, dir), k)
     }
-    Reads.parquet(s, s"${root.toString}/dial")
+    Reads.parquet(s, s"${root}/dial")
       .select(col("nprobe"), col("hits"), col("n_queries"),
         col("mean_recall"))
       .orderBy(col("nprobe"))
@@ -1347,14 +1307,12 @@ object AnnIndex {
     */
   def embIvfPqServeDialed(s: SparkSession, dir: String, k: Int = 5,
       targetRecall: Double = 0.5): DataFrame = {
-    val emb = Tables.embeddings(s, dir)
-    val root = indexRoot(s, dir, "ivfpqd")
-    ensureBuilt(s, root) { staging =>
+    val root = ensuredRoot(s, dir, "ivfpqd") { (emb, staging) =>
       buildIvfPq(emb, staging)
       writeIvfPqDial(s, emb, staging, queryLiterals(s, dir), k)
     }
-    serveIvfPqTopk(s, root.toString, queryLiterals(s, dir), k,
-      resolveNprobe(s, root.toString, targetRecall))
+    serveIvfPqTopk(s, root, queryLiterals(s, dir), k,
+      resolveNprobe(s, root, targetRecall))
   }
 
   /** The FILTERED dialed serve: the labeled index carries its own dial
@@ -1366,14 +1324,12 @@ object AnnIndex {
     */
   def embIvfServeFilteredDialed(s: SparkSession, dir: String, k: Int = 5,
       targetRecall: Double = 0.5, label: Int = 3): DataFrame = {
-    val emb = Tables.embeddings(s, dir)
-    val root = indexRoot(s, dir, "ivfld")
-    ensureBuilt(s, root) { staging =>
+    val root = ensuredRoot(s, dir, "ivfld") { (emb, staging) =>
       buildIvfLabeled(emb, staging)
       writeIvfDial(s, staging, queryLiterals(s, dir), k,
         labelEq = Some(label))
     }
-    serveIvfTopkDialed(s, root.toString, queryLiterals(s, dir), k,
+    serveIvfTopkDialed(s, root, queryLiterals(s, dir), k,
       targetRecall, labelEq = Some(label))
   }
 
@@ -1391,10 +1347,8 @@ object AnnIndex {
     */
   def embIvfServeFiltered(s: SparkSession, dir: String, k: Int = 5,
       nprobe: Int = 4, label: Int = 3): DataFrame = {
-    val emb = Tables.embeddings(s, dir)
-    val root = indexRoot(s, dir, "ivfl")
-    ensureBuilt(s, root)(staging => buildIvfLabeled(emb, staging))
-    serveIvfTopk(s, root.toString, queryLiterals(s, dir), k, nprobe,
+    val root = ensuredRoot(s, dir, "ivfl")(buildIvfLabeled(_, _))
+    serveIvfTopk(s, root, queryLiterals(s, dir), k, nprobe,
       labelEq = Some(label))
   }
 
@@ -1408,13 +1362,11 @@ object AnnIndex {
     */
   def embIvfAppendServe(s: SparkSession, dir: String, k: Int = 5,
       nprobe: Int = 2): DataFrame = {
-    val emb = Tables.embeddings(s, dir)
-    val root = indexRoot(s, dir, "ivfapp")
-    ensureBuilt(s, root) { staging =>
+    val root = ensuredRoot(s, dir, "ivfapp") { (emb, staging) =>
       val half = emb.count() / 2
       buildIvf(emb.filter(col("vec_id") < half), staging)
       appendIvf(emb.filter(col("vec_id") >= half), staging)
     }
-    serveIvfTopk(s, root.toString, queryLiterals(s, dir), k, nprobe)
+    serveIvfTopk(s, root, queryLiterals(s, dir), k, nprobe)
   }
 }

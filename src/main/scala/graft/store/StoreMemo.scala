@@ -1,7 +1,8 @@
 package graft.store
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** The one process-level memo of store and corpus state: root digests,
   * index headers (codebooks, centroids, BM25 stats), query panels and
@@ -42,15 +43,20 @@ object StoreMemo {
     }
   }
 
+  /** `plan`'s schema and rows, collected once per state. */
+  def collected(spark: SparkSession, key: String, watched: Seq[String])(
+      plan: => DataFrame): (StructType, Array[Row]) =
+    get(spark, key, watched) {
+      val df = plan
+      (df.schema, df.collect())
+    }
+
   /** `plan`'s rows, collected once per state and rebuilt as a literal
     * local relation on every call (session-correct).
     */
   def rows(spark: SparkSession, key: String, watched: Seq[String])(
       plan: => DataFrame): DataFrame = {
-    val (schema, rs) = get(spark, key, watched) {
-      val df = plan
-      (df.schema, df.collect())
-    }
+    val (schema, rs) = collected(spark, key, watched)(plan)
     spark.createDataFrame(java.util.Arrays.asList(rs: _*), schema)
   }
 

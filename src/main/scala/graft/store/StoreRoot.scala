@@ -1,8 +1,9 @@
 package graft.store
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.graftbridge.ParquetFooters
+import org.apache.spark.sql.types.StructType
 
 /** Shared root-resolution + publish protocol for the persisted stores
   * (`AnnIndex`, `TextIndex`, the hybrid dial): one digest recipe and
@@ -46,6 +47,33 @@ object StoreRoot {
       plan: => DataFrame): DataFrame =
     StoreMemo.rows(spark, s"artifact:$path", Seq(path))(plan)
 
+  /** [[localizedArtifact]]'s schema and rows, for headers the driver
+    * computes with (the PQ codebooks behind the ADC lookup table).
+    */
+  def localizedRows(spark: SparkSession, path: String)(
+      plan: => DataFrame): (StructType, Array[Row]) =
+    StoreMemo.collected(spark, s"artifact:$path", Seq(path))(plan)
+
+  /** Never-recycled identity for scratch-tree ownership: Thread.getId
+    * may be reused by the JVM after a thread dies, so trees are keyed
+    * by a per-thread tag drawn once from a monotonic counter. The
+    * loader nonce keeps tags disjoint across classloaders sharing one
+    * JVM (each loader's counter restarts at 0 — without the nonce two
+    * loaders' first threads would share a tree path).
+    */
+  private val loaderNonce: String =
+    java.lang.Long.toHexString(System.nanoTime() & 0xFFFFFFFFL)
+  private val threadTagSeq = new java.util.concurrent.atomic.AtomicLong(0L)
+  private val threadTag: ThreadLocal[String] = ThreadLocal.withInitial(() =>
+    s"$loaderNonce-${threadTagSeq.incrementAndGet()}")
+
+  /** Registry of issued scratch trees: tag → owning Thread. The sweep
+    * in [[scratchRoot]] reclaims exactly the registered trees whose
+    * owner Thread has died — see the inline rationale there.
+    */
+  private val issuedTrees =
+    new java.util.concurrent.ConcurrentHashMap[String, Thread]()
+
   /** Deterministic per-process scratch root for registered queries
     * that exercise durable pipelines against throwaway trees (the
     * incremental sinks): at most ONE tree per (name, JVM, thread) ever
@@ -69,26 +97,6 @@ object StoreRoot {
     * process with that pid exists AND its start instant matches — a
     * recycled pid no longer shields a dead JVM's tree forever.
     */
-  /** Never-recycled identity for scratch-tree ownership: Thread.getId
-    * may be reused by the JVM after a thread dies, so trees are keyed
-    * by a per-thread tag drawn once from a monotonic counter. The
-    * loader nonce keeps tags disjoint across classloaders sharing one
-    * JVM (each loader's counter restarts at 0 — without the nonce two
-    * loaders' first threads would share a tree path).
-    */
-  private val loaderNonce: String =
-    java.lang.Long.toHexString(System.nanoTime() & 0xFFFFFFFFL)
-  private val threadTagSeq = new java.util.concurrent.atomic.AtomicLong(0L)
-  private val threadTag: ThreadLocal[String] = ThreadLocal.withInitial(() =>
-    s"$loaderNonce-${threadTagSeq.incrementAndGet()}")
-
-  /** Registry of issued scratch trees: tag → owning Thread. The sweep
-    * in [[scratchRoot]] reclaims exactly the registered trees whose
-    * owner Thread has died — see the inline rationale there.
-    */
-  private val issuedTrees =
-    new java.util.concurrent.ConcurrentHashMap[String, Thread]()
-
   def scratchRoot(name: String): String = {
     val base = java.nio.file.Paths.get(
       System.getProperty("java.io.tmpdir"), "graft_scratch")
@@ -270,10 +278,6 @@ object StoreRoot {
     fs.delete(old, true)
   }
 
-  /** Heal a crash inside `swapDir`: a missing live dir with a
-    * surviving `__old` renames back; stray `__compacting`/`__old`
-    * leftovers are dropped.
-    */
   /** Heal every root-level swap crash under a base dir: each
     * `__old`/`__compacting` leftover reconciles through `recoverSwap`
     * on its base name. The suffix scheme is THIS module's protocol
@@ -293,6 +297,10 @@ object StoreRoot {
       .foreach(b => recoverSwap(spark, s"$baseDir/$b"))
   }
 
+  /** Heal a crash inside `swapDir`: a missing live dir with a
+    * surviving `__old` renames back; stray `__compacting`/`__old`
+    * leftovers are dropped.
+    */
   def recoverSwap(spark: SparkSession, dir: String): Unit = {
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val live = new Path(dir)

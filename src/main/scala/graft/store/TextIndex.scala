@@ -2,7 +2,6 @@ package graft.store
 
 import graft.{Reads, Tables}
 import graft.functions.TextFunctions
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -35,16 +34,19 @@ object TextIndex {
 
   private val FormatVersion = "v1"
 
-  /** Root resolution + publish via the shared `StoreRoot` protocol,
-    * keyed on the documents table's state.
+  /** The `kind` root for a corpus dir — resolved and published via the
+    * shared `StoreRoot` protocol, keyed on the documents table's state —
+    * built if absent by `build(documents, staging)`. The table is read
+    * only inside the build, so a warm call pays no footer read.
     */
-  private def indexRoot(spark: SparkSession, dir: String,
-      kind: String = "lex"): Path =
-    StoreRoot.rootFor(spark, s"$dir/documents.parquet", kind, FormatVersion)
-
-  private def ensureBuilt(spark: SparkSession, root: Path)(
-      build: String => Unit): Unit =
-    StoreRoot.ensureBuilt(spark, root)(build)
+  private def ensured(spark: SparkSession, dir: String, kind: String)(
+      build: (DataFrame, String) => Unit): String = {
+    val root = StoreRoot.rootFor(spark, s"$dir/documents.parquet", kind,
+      FormatVersion)
+    StoreRoot.ensureBuilt(spark, root)(staging =>
+      build(Tables.documents(spark, dir), staging))
+    root.toString
+  }
 
   /** The per-document token counts (the one tokenize scan an index
     * build or append pays). `df`, `dl` and `stats` are pure aggregates
@@ -193,64 +195,69 @@ object TextIndex {
       postings: DataFrame): DataFrame =
     AnnIndex.minusDeletes(spark, root, postings, "doc_id")
 
-  /** BM25 top-k from the persisted index: the query panel's terms come
-    * from its own postings rows (doc_id < 10), candidates from the
-    * postings join on term — the identical arithmetic (and literals)
-    * as the in-session lexical leg, over stored statistics.
+  /** The query side of a lexical root, read once per state of the
+    * tables it derives from (through [[StoreMemo]]): the panel's terms
+    * (the surviving postings rows of doc_id < 10) as term → query ids,
+    * those terms' summed `df`, and the summed `stats` row. `df` and
+    * `stats` are append-only DELTAS, summed here (the identity when the
+    * index was built in one shot). Index headers like `stats`, not
+    * results: the postings table is sorted by term, so the doc_id < 10
+    * filter prunes nothing and each read scanned the whole table, and
+    * the per-serve `df` scan plus two-phase aggregate was a sequential
+    * stage of pure latency on every warm serve.
+    */
+  private final case class LexHeader(panel: Map[String, Seq[Long]],
+      df: Map[String, Long], nDocs: Long, sumDl: Long)
+
+  private def lexHeader(spark: SparkSession, root: String,
+      postings: DataFrame): LexHeader =
+    StoreMemo.get(spark, s"lex-header:$root",
+        Seq("postings", "deletes", "df", "stats").map(t => s"$root/$t")) {
+      val panel = postings.filter(col("doc_id") < 10)
+        .select(col("tok"), col("doc_id")).collect()
+        .groupBy(_.getString(0))
+        .map { case (t, rs) => t -> rs.map(_.getLong(1)).toSeq.sorted }
+      val df = Reads.parquet(spark, s"$root/df")
+        .filter(col("tok").isInCollection(panel.keys.toSeq.sorted))
+        .groupBy(col("tok")).agg(sum(col("df"))).collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      val stats = Reads.parquet(spark, s"$root/stats")
+        .agg(sum(col("n_docs")), sum(col("sum_dl"))).head()
+      LexHeader(panel, df, stats.getLong(0), stats.getLong(1))
+    }
+
+  /** BM25 top-k from the persisted index, the identical arithmetic (and
+    * literals) as the in-session lexical leg over stored statistics,
+    * in one exchange on the item key: the queried terms' postings slice
+    * is repartitioned by `doc_id`, scored against the folded-in panel,
+    * `df` and `stats` and the `dl` table, and summed per (query, doc)
+    * inside that partitioning; the top-k window keeps its partial
+    * `WindowGroupLimit` before the one exchange on `query_id`.
     */
   def serveBm25(spark: SparkSession, root: String, k: Int = 5): DataFrame = {
     val postings = minusDeletes(spark, root,
       Reads.parquet(spark, s"$root/postings"))
-    // df and stats are append-only DELTAS — sum them (the identity
-    // when the index was built in one shot). The summed stats row is a
-    // one-row index header, localized per store state (r19,
-    // StoreRoot.localizedArtifact): the per-serve scan + two-phase
-    // aggregate + broadcast build over a few-row table was 3 fixed
-    // stages of pure latency on every warm serve.
-    val dl = Reads.parquet(spark, s"$root/dl")
-    val stats = StoreRoot.localizedArtifact(spark, s"$root/stats")(
-      Reads.parquet(spark, s"$root/stats")
-        .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl")))
-    // the panel's terms as a LITERAL relation (control-plane — ≤
-    // panel×terms rows, the lexical twin of the IVF probe route): the
-    // IN literals push into the postings AND df scans as parquet
-    // filters, so the term-sorted row groups SKIP everything outside
-    // the query vocabulary. Without this the candidate join reads the
-    // whole postings table; with it, serve I/O is the queried terms'
-    // slice — the property that makes a 100 TB postings store servable.
-    // ONE collect feeds both the literal panel relation and the term
-    // literals (r14: the separate distinct().collect() was a second
-    // driver job on every warm serve — pure stage-count latency), and
-    // the collected rows are memoized per postings+deletes state in
-    // `StoreMemo` (the postings table is sorted by term, so the
-    // doc_id < 10 filter prunes nothing and each collect re-read the
-    // whole table) so a warm serve runs ZERO panel jobs.
-    val panelPlan = postings.filter(col("doc_id") < 10)
-      .select(col("doc_id").as("query_id"), col("tok"))
-    val qtRows = StoreMemo.get(spark, s"lex-panel:$root",
-      Seq(s"$root/postings", s"$root/deletes"))(panelPlan.collect())
-    val qt = spark.createDataFrame(
-      java.util.Arrays.asList(qtRows: _*), panelPlan.schema)
-    // sorted: collect order is partition-arrival nondeterministic, and
-    // these values become plan LITERALS — an unsorted list makes the
+    val h = lexHeader(spark, root, postings)
+    // the panel's terms become IN literals that push into the postings
+    // scan as parquet filters, so the term-sorted row groups SKIP
+    // everything outside the query vocabulary: serve I/O is the queried
+    // terms' slice — the property that makes a 100 TB postings store
+    // servable. Sorted: plan literals in collect order would make the
     // generated filter source differ per run, defeating the codegen
     // cache (the bench artifact read ~10 recompiled classes on every
     // re-run of the serve queries before this)
-    val queryToks: Seq[Any] =
-      qtRows.map(_.getString(1)).distinct.sorted.toSeq
-    val dfreq = Reads.parquet(spark, s"$root/df")
-      .filter(col("tok").isInCollection(queryToks))
-      .groupBy(col("tok")).agg(sum(col("df")).as("df"))
+    val queryToks: Seq[Any] = h.panel.keys.toSeq.sorted
     val term = postings.filter(col("tok").isInCollection(queryToks))
-      .join(qt, Seq("tok"))
+      .repartition(col("doc_id"))
+      .select(col("doc_id"), col("tf"),
+        element_at(typedLit(h.df), col("tok")).as("df"),
+        explode(element_at(typedLit(h.panel), col("tok"))).as("query_id"))
       .filter(col("doc_id") =!= col("query_id"))
-      .join(dfreq, Seq("tok"))
-      .join(dl, Seq("doc_id"))
-      .crossJoin(broadcast(stats))
+      .join(Reads.parquet(spark, s"$root/dl"), Seq("doc_id"))
     val idf = log(lit(1.0) +
-      (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
+      (lit(h.nDocs) - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
     val norm = lit(0.25) +
-      lit(0.75) * col("dl") * col("n_docs") / col("sum_dl")
+      lit(0.75) * col("dl") * lit(h.nDocs) / lit(h.sumDl)
     val bm25 = term
       .select(col("query_id"), col("doc_id"),
         (idf * col("tf") * lit(2.2) /
@@ -271,12 +278,8 @@ object TextIndex {
   }
 
   /** The lexical index root for a corpus dir, built if absent. */
-  def ensuredRoot(s: SparkSession, dir: String): String = {
-    val docs = Tables.documents(s, dir)
-    val root = indexRoot(s, dir)
-    ensureBuilt(s, root)(staging => build(docs, staging))
-    root.toString
-  }
+  def ensuredRoot(s: SparkSession, dir: String): String =
+    ensured(s, dir, "lex")(build)
 
   def lexBm25Serve(s: SparkSession, dir: String, k: Int = 5): DataFrame =
     serveBm25(s, ensuredRoot(s, dir), k)
@@ -290,14 +293,12 @@ object TextIndex {
     */
   def lexBm25AppendServe(s: SparkSession, dir: String,
       k: Int = 5): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    val root = indexRoot(s, dir, "lexapp")
-    ensureBuilt(s, root) { staging =>
+    val root = ensured(s, dir, "lexapp") { (docs, staging) =>
       val half = docs.count() / 2
       build(docs.filter(col("doc_id") < half), staging)
       appendBatch(docs.filter(col("doc_id") >= half), staging, 0L)
     }
-    serveBm25(s, root.toString, k)
+    serveBm25(s, root, k)
   }
 
   /** The takedown path as a registered, oracle-gated query: build the
@@ -309,15 +310,13 @@ object TextIndex {
     */
   def lexBm25ServeTombstone(s: SparkSession, dir: String,
       k: Int = 5): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    val root = indexRoot(s, dir, "lexdel")
-    ensureBuilt(s, root) { staging =>
+    val root = ensured(s, dir, "lexdel") { (docs, staging) =>
       build(docs, staging)
       deleteDocs(s, staging,
         docs.filter(col("doc_id") % 23 === 4 && col("doc_id") >= 10)
           .select(col("doc_id")), 0L)
     }
-    serveBm25(s, root.toString, k)
+    serveBm25(s, root, k)
   }
 
   /** The append-then-FOLD path as a registered query: build + append
@@ -330,14 +329,12 @@ object TextIndex {
     */
   def lexBm25CompactServe(s: SparkSession, dir: String,
       k: Int = 5): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    val root = indexRoot(s, dir, "lexcmp")
-    ensureBuilt(s, root) { staging =>
+    val root = ensured(s, dir, "lexcmp") { (docs, staging) =>
       val half = docs.count() / 2
       build(docs.filter(col("doc_id") < half), staging)
       appendBatch(docs.filter(col("doc_id") >= half), staging, 0L)
       Compaction.compactLexStore(s, staging)
     }
-    serveBm25(s, root.toString, k)
+    serveBm25(s, root, k)
   }
 }

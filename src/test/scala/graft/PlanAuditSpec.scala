@@ -255,4 +255,23 @@ class PlanAuditSpec extends SparkSpec {
     }
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
+
+  // warm-action job budgets, the first entries of a per-query max-jobs
+  // bound: a retrieval serve is one exchange on the item key plus one
+  // top-k merge. PQ: the LUT and vnorms broadcasts, the code shuffle on
+  // vec_id, the partial top-k and the merge; BM25: the dl broadcast, the
+  // postings shuffle on doc_id, the partial window limit and the merge
+  private val warmActionJobs = Seq("emb_pq_serve" -> 5, "lex_bm25_serve" -> 4)
+
+  test("warm action of the retrieval serves stays within its job budget") {
+    val over = warmActionJobs.flatMap { case (name, budget) =>
+      SparkEntry.queries(name)(spark, Sf0001).collect()
+      val df = SparkEntry.queries(name)(spark, Sf0001)
+      val (_, jobs) = org.apache.spark.graftbridge.JobCounter.jobsIn(
+        spark.sparkContext)(df.collect())
+      if (jobs.size <= budget) None
+      else Some(s"$name: ${jobs.size} jobs, budget $budget")
+    }
+    assert(over.isEmpty, over.mkString("\n"))
+  }
 }

@@ -4,9 +4,10 @@ import java.nio.file.Files
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.graftbridge.JobCounter
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
-import graft.store.{AnnIndex, StoreMemo, StoreRoot}
+import graft.store.{AnnIndex, StoreMemo, StoreRoot, TextIndex}
 
 /** `StoreMemo` serves the rows of the store state it was computed from:
   * a rewrite that keeps the directory's mtime and entry count still
@@ -114,5 +115,30 @@ class StoreMemoSpec extends SparkSpec {
     emb.filter(col("vec_id") < 20).coalesce(1).write.mode("overwrite").parquet(copy)
     assert(StoreRoot.rowCount(spark, copy) == 20)
     assert(StoreRoot.rootFor(spark, copy, kind, "v1") != before)
+  }
+
+  test("the lexical serve's header follows a delete and an append on one root") {
+    val docs = Tables.documents(spark, Sf0001)
+    def served(root: String) =
+      TextIndex.serveBm25(spark, root).collect().map(_.toString).toSeq.sorted
+    def oneShot(live: DataFrame) = {
+      val ref = s"${tmp("memo_lexref")}/idx"
+      TextIndex.build(live, ref)
+      served(ref)
+    }
+    val half = docs.count() / 2
+    val base = docs.filter(col("doc_id") < half)
+    val root = s"${tmp("memo_lex")}/idx"
+    TextIndex.build(base, root)
+    assert(served(root) == oneShot(base))
+    // doc 3 is a panel doc: the delete changes the panel's terms as
+    // well as the df and stats sums
+    val dead = base.filter(col("doc_id") % 7 === 3).select(col("doc_id"))
+    TextIndex.deleteDocs(spark, root, dead, 0L)
+    val live = base.join(dead, Seq("doc_id"), "left_anti")
+    assert(served(root) == oneShot(live))
+    val more = docs.filter(col("doc_id") >= half)
+    TextIndex.appendBatch(more, root, 1L)
+    assert(served(root) == oneShot(live.unionByName(more)))
   }
 }
