@@ -17,8 +17,8 @@ import org.apache.spark.sql.types._
   *     → T5 timestamp normalization (:407-437)
   *     → T6 sanity clamp (timescaledb_sink.py:152-161)
   *     → T7/T8 validation split (:387-405, models.py:171-197)
-  *     → T9 threshold anomaly flag via broadcast threshold config
-  *       (:470-511, config.yaml:152-159)
+  *     → T9 threshold anomaly flag from the threshold config, folded
+  *       into the plan as a literal map (:470-511, config.yaml:152-159)
   *
   * The same transform chain serves batch backfill and the streaming
   * ingest job (DataFrames are source-agnostic); the sink side is
@@ -45,8 +45,9 @@ object Ingest {
     SensorMap("movement_counter", "motion_counter", "count"))
 
   /** Per-type anomaly thresholds (config.yaml:152-159 / config.py:295-305)
-    * as a tiny config table — broadcast-joined (J1), never hardcoded in
-    * the plan, so ops can change thresholds without a redeploy.
+    * as a tiny config table — read when the ingest plan is built, never
+    * hardcoded in the plan, so ops can change thresholds without a
+    * redeploy.
     */
   def thresholdConfig(s: SparkSession): DataFrame = {
     import s.implicits._
@@ -126,12 +127,17 @@ object Ingest {
       (col("battery_level").isNull || col("battery_level").between(0, 100))
     val valid = fanned.filter(validCond)
     val invalid = fanned.filter(!validCond)
-    val flagged = valid
-      .join(broadcast(thresholdConfig(s)), Seq("device_type"), "left")
-      .withColumn("is_anomaly",
-        col("min_ok").isNotNull &&
-          (col("value") < col("min_ok") || col("value") > col("max_ok")))
-      .drop("min_ok", "max_ok")
+    // the config's rows are local, so collecting them runs no job; as a
+    // literal map in the plan they cost no broadcast job per micro-batch
+    val limits = map(thresholdConfig(s).collect().toSeq.flatMap(r => Seq(
+      lit(r.getString(0)),
+      struct(lit(r.getDouble(1)).as("min_ok"), lit(r.getDouble(2)).as("max_ok")))): _*)
+    val lim = limits(col("device_type"))
+    // the left join's column order: the join key first
+    val flagged = valid.select(
+      col("device_type") +: valid.columns.toSeq.filter(_ != "device_type").map(col) :+
+        (lim.isNotNull &&
+          (col("value") < lim("min_ok") || col("value") > lim("max_ok"))).as("is_anomaly"): _*)
     (flagged, invalid)
   }
 

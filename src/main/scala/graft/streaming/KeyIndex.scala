@@ -1,7 +1,9 @@
 package graft.streaming
 
 import graft.Reads
-import org.apache.hadoop.fs.{FileSystem, Path}
+import java.io.FileNotFoundException
+
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 
 /** Key sidecar index for the keyed transactional sink
   * (`Streams.commitBatch(keyedDedup = true)`): the machinery that
@@ -19,8 +21,12 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *     count;
   *   - a per-commit exact-key parquet segment
   *     (`_keyidx/event_date=D/{prefix}keys-*.parquet`) consulted ONLY
-  *     when some batch row hits a bloom — the common all-new-keys
-  *     commit never scans any keys at all (the blooms prove absence);
+  *     when some batch row hits a bloom. The commit probes its deduped,
+  *     date-partitioned copy against the OR of the touched dates'
+  *     committed blooms in one job; on a hit, the touched dates'
+  *     committed segments are the broadcast build side of an exact key
+  *     anti-join. The common all-new-keys commit never scans any keys
+  *     at all (the blooms prove absence);
   *   - segments and blooms are staged and PROMOTED with the batch's own
   *     file prefix and become authoritative only once the batch marker
   *     lands — the same transaction the data rides. A crashed attempt's
@@ -135,47 +141,77 @@ object KeyIndex {
     * "{epoch}batch{id}-" (the names `commitBatch` stamps on every file
     * it promotes).
     */
-  def committedPrefixes(fs: FileSystem, outDir: String): Set[String] = {
-    val dir = new Path(s"$outDir/_committed")
-    if (!fs.exists(dir)) Set.empty
-    else fs.listStatus(dir).iterator.map(_.getPath.getName).flatMap { name =>
+  def committedPrefixes(fs: FileSystem, outDir: String): Set[String] =
+    filesIn(fs, new Path(s"$outDir/_committed")).map(_.getPath.getName).flatMap { name =>
       val i = name.lastIndexOf("batch-")
       if (i < 0) None
       else Some(name.substring(0, i) + "batch" + name.substring(i + 6) + "-")
     }.toSet
-  }
+
+  private def dataDir(outDir: String, date: Any): Path =
+    new Path(s"$outDir/event_date=$date")
 
   private def idxDir(outDir: String, date: Any): Path =
     new Path(s"$outDir/_keyidx/event_date=$date")
 
-  /** Committed sidecar segment key files for one partition. */
-  def committedKeyFiles(fs: FileSystem, outDir: String, date: Any,
-      prefixes: Set[String]): Seq[Path] = {
-    val d = idxDir(outDir, date)
-    if (!fs.exists(d)) Seq.empty
-    else fs.listStatus(d).iterator
-      .filter(f => f.isFile && f.getPath.getName.contains("keys"))
-      .filter(f => prefixes.exists(f.getPath.getName.startsWith))
-      .map(_.getPath).toSeq
+  /** The files of one directory, in one listing: a missing directory
+    * throws on the listing itself, so no separate `exists` probe.
+    */
+  private def filesIn(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    try fs.listStatus(dir).toSeq.filter(_.isFile)
+    catch { case _: FileNotFoundException => Seq.empty }
+
+  /** One touched partition's files: its data directory and its
+    * `_keyidx` directory, each listed once per commit and handed to
+    * every helper below.
+    */
+  final case class Listing(data: Seq[FileStatus], idx: Seq[FileStatus])
+
+  def listing(fs: FileSystem, outDir: String, date: Any): Listing =
+    Listing(filesIn(fs, dataDir(outDir, date)), filesIn(fs, idxDir(outDir, date)))
+
+  private def names(files: Seq[FileStatus])(p: String => Boolean): Seq[Path] =
+    files.map(_.getPath).filter(f => p(f.getName))
+
+  private def liveData(data: Seq[FileStatus]): Seq[Path] =
+    names(data)(!_.startsWith("_"))
+
+  /** Delete a crashed attempt's files by prefix, data and sidecar both,
+    * and return the listing without them.
+    */
+  def rollbackPrefix(fs: FileSystem, l: Listing, filePrefix: String): Listing = {
+    def drop(files: Seq[FileStatus]) = {
+      val (gone, kept) = files.partition(_.getPath.getName.startsWith(filePrefix))
+      gone.foreach(f => fs.delete(f.getPath, false))
+      kept
+    }
+    Listing(drop(l.data), drop(l.idx))
   }
 
-  /** Load + OR-merge the committed blooms of one partition (KBs). */
-  def loadBlooms(fs: FileSystem, outDir: String, date: Any,
-      prefixes: Set[String]): Seq[KeyBloom] = {
-    val d = idxDir(outDir, date)
-    if (!fs.exists(d)) Seq.empty
-    else fs.listStatus(d).iterator
-      .filter(f => f.isFile && f.getPath.getName.endsWith("bloom.bin"))
-      .filter(f => prefixes.exists(f.getPath.getName.startsWith))
-      .map { f =>
-        val in = fs.open(f.getPath)
-        try {
-          val b = new Array[Byte](f.getLen.toInt)
-          in.readFully(b)
-          KeyBloom.deserialize(b)
-        } finally in.close()
-      }.toSeq
-  }
+  /** Committed sidecar segment key files among a partition's `_keyidx`
+    * files.
+    */
+  def committedKeyFiles(idx: Seq[FileStatus], prefixes: Set[String]): Seq[Path] =
+    names(idx)(n => n.contains("keys") && prefixes.exists(n.startsWith))
+
+  def committedKeyFiles(fs: FileSystem, outDir: String, date: Any,
+      prefixes: Set[String]): Seq[Path] =
+    committedKeyFiles(filesIn(fs, idxDir(outDir, date)), prefixes)
+
+  /** Load the committed blooms among a partition's `_keyidx` files (KBs). */
+  def loadBlooms(fs: FileSystem, idx: Seq[FileStatus],
+      prefixes: Set[String]): Seq[KeyBloom] =
+    idx.filter { f =>
+      val n = f.getPath.getName
+      n.endsWith("bloom.bin") && prefixes.exists(n.startsWith)
+    }.map { f =>
+      val in = fs.open(f.getPath)
+      try {
+        val b = new Array[Byte](f.getLen.toInt)
+        in.readFully(b)
+        KeyBloom.deserialize(b)
+      } finally in.close()
+    }
 
   /** Data files in the partition carrying NO committed prefix —
     * residue from an ABANDONED checkpoint lineage that crashed
@@ -185,15 +221,12 @@ object KeyIndex {
     * `Streams.commitBatch` adopts them under the committing batch's
     * prefix once its marker lands.
     */
+  def uncoveredDataFiles(data: Seq[FileStatus], prefixes: Set[String]): Seq[Path] =
+    liveData(data).filterNot(f => prefixes.exists(f.getName.startsWith))
+
   def uncoveredDataFiles(fs: FileSystem, outDir: String, date: Any,
-      prefixes: Set[String]): Seq[Path] = {
-    val dataDir = new Path(s"$outDir/event_date=$date")
-    if (!fs.exists(dataDir)) Seq.empty
-    else fs.listStatus(dataDir).iterator
-      .filter(f => f.isFile && !f.getPath.getName.startsWith("_"))
-      .filter(f => !prefixes.exists(f.getPath.getName.startsWith))
-      .map(_.getPath).toSeq
-  }
+      prefixes: Set[String]): Seq[Path] =
+    uncoveredDataFiles(filesIn(fs, dataDir(outDir, date)), prefixes)
 
   /** True iff the partition needs the migration read-back: live data
     * exists and either no committed sidecar segment covers the
@@ -201,26 +234,13 @@ object KeyIndex {
     * committed prefix (abandoned-lineage residue — reader-visible but
     * otherwise invisible to marker-gated dedup).
     */
-  def needsMigration(fs: FileSystem, outDir: String, date: Any,
-      prefixes: Set[String]): Boolean = {
-    val dataDir = new Path(s"$outDir/event_date=$date")
-    val hasData = fs.exists(dataDir) &&
-      fs.listStatus(dataDir).exists(f => f.isFile && !f.getPath.getName.startsWith("_"))
-    hasData && (committedKeyFiles(fs, outDir, date, prefixes).isEmpty ||
-      uncoveredDataFiles(fs, outDir, date, prefixes).nonEmpty)
-  }
+  def needsMigration(l: Listing, prefixes: Set[String]): Boolean =
+    liveData(l.data).nonEmpty && (committedKeyFiles(l.idx, prefixes).isEmpty ||
+      uncoveredDataFiles(l.data, prefixes).nonEmpty)
 
-  /** Delete a crashed attempt's sidecar files by prefix (the keyidx
-    * twin of the data-partition rollback).
-    */
-  def rollbackPrefix(fs: FileSystem, outDir: String, date: Any,
-      filePrefix: String): Unit = {
-    val d = idxDir(outDir, date)
-    if (fs.exists(d))
-      fs.listStatus(d)
-        .filter(f => f.isFile && f.getPath.getName.startsWith(filePrefix))
-        .foreach(f => fs.delete(f.getPath, false))
-  }
+  def needsMigration(fs: FileSystem, outDir: String, date: Any,
+      prefixes: Set[String]): Boolean =
+    needsMigration(listing(fs, outDir, date), prefixes)
 
   /** Fold a partition's committed segments into one compact segment
     * (bounds per-commit bloom/segment counts on long-lived hot

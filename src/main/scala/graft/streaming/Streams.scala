@@ -185,10 +185,16 @@ object Streams {
     *
     *  1. a `_committed/batch-N` marker short-circuits a fully committed
     *     batch replayed after a crash between commit and checkpoint;
-    *  2. the batch is deduped on the natural key and anti-joined against
-    *     the keys ALREADY IN THE SINK (scan pruned to the date
-    *     partitions the batch touches), then written to a `_staging`
-    *     dir — never directly into the live tree;
+    *  2. ONE exchange, on `event_date`, carries the whole commit: the
+    *     batch is hash-partitioned by date, deduped on the natural key
+    *     inside that exchange and pinned, and the action that pins it
+    *     also reports the touched dates. Keys that hit the touched
+    *     dates' committed blooms send the copy through an exact
+    *     anti-join against those dates' committed key segments (a
+    *     broadcast build side, so the copy keeps its partitioning); the
+    *     rows left, one key segment and one bloom per touched date are
+    *     written to a `_staging` dir — never directly into the live
+    *     tree;
     *  3. staged files are promoted by per-file rename into the live
     *     partition dirs, then the marker is written and staging dropped.
     *
@@ -233,6 +239,9 @@ object Streams {
       keys: Seq[String] = Seq("user_id", "ts"),
       epoch: String = "",
       keyedDedup: Boolean = true): Unit = {
+    // the date partitions, the per-date key index and the dedupe all
+    // take event_date as a function of the key
+    require(keys.contains("ts"), s"commitBatch: keys $keys must include ts")
     val spark = batch.sparkSession
     val hconf = spark.sparkContext.hadoopConfiguration
     val fs = new org.apache.hadoop.fs.Path(outDir).getFileSystem(hconf)
@@ -244,20 +253,36 @@ object Streams {
     // "{epoch}batch{id}-", so a crashed attempt's partial promote can be
     // rolled back by name, without reading any data
     val filePrefix = s"${epoch}batch$batchId-"
-    // persist + materialize ONCE: the micro-batch's upstream plan (e.g.
-    // the full decode pipeline, plus any observe() counters riding it)
-    // would otherwise re-execute for each action below — paying the
-    // decode twice per commit and double-counting observed metrics
-    val fresh = batch.dropDuplicates(keys)
-      .withColumn("event_date", to_date(col("ts")))
-      .persist()
+    // a copy read by several actions is pinned by a LAZY local
+    // checkpoint: the first action over it fills it. (The first action
+    // over a persist()ed adaptive plan runs one job to fill the cache
+    // and a second for itself.)
+    def pin(df: DataFrame): DataFrame = df.localCheckpoint(eager = false)
+    def unpin(df: DataFrame): Unit = df.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ => ()
+    }
+    // ONE exchange, on event_date, pinned: the key dedupe rides it
+    // (event_date derives from ts, one of the keys, so deduping on keys
+    // plus event_date is the key dedupe), each date's rows sit in one
+    // partition, and the micro-batch's upstream plan (the decode
+    // pipeline, plus any observe() counters riding it) runs once. Every
+    // later step reads this copy with no further shuffle.
+    val fresh = pin(batch.withColumn("event_date", to_date(col("ts")))
+      .repartition(col("event_date"))
+      .dropDuplicates(keys :+ "event_date"))
     // abandoned-lineage residue files to adopt once this batch's marker
     // lands (filled by the keyed path's migration step)
     var adoptable: Seq[org.apache.hadoop.fs.Path] = Seq.empty
     try {
-      val touched = fresh.select(col("event_date")).distinct()
-        .collect().map(_.get(0))
-      // rollback-by-prefix runs UNCONDITIONALLY whenever the marker is
+      // the action that pins the copy also yields the touched dates:
+      // each partition reports its own distinct dates (a distinct or
+      // groupBy over the pinned copy would plan a second exchange)
+      val touched = fresh.select(col("event_date")).rdd
+        .mapPartitions(_.map(_.get(0)).toSet.iterator).collect().distinct
+      // each touched date's data and _keyidx dirs are listed ONCE; the
+      // rollback, migration, bloom and segment steps share that listing.
+      // Rollback-by-prefix runs UNCONDITIONALLY whenever the marker is
       // absent: a crashed attempt's partial promote (data AND keyidx
       // sidecar) is dropped by name, no content read-back. The replayed
       // batch has the same rows (same id, same checkpoint lineage),
@@ -267,30 +292,23 @@ object Streams {
       // window: residue was deleted before the rollback ran, so a crash
       // between the two left the next replay with no marker, no
       // residue, and the first attempt's promoted files still live.)
-      touched.foreach { d =>
-        val dir = p(s"$outDir/event_date=$d")
-        if (fs.exists(dir))
-          fs.listStatus(dir)
-            .filter(f => f.isFile && f.getPath.getName.startsWith(filePrefix))
-            .foreach(f => fs.delete(f.getPath, false))
-        KeyIndex.rollbackPrefix(fs, outDir, d, filePrefix)
-      }
+      val listed = touched.map(d =>
+        d -> KeyIndex.rollbackPrefix(fs, KeyIndex.listing(fs, outDir, d), filePrefix))
       fs.delete(staging, true) // leftover from a crashed attempt
       // one staged file per touched partition per commit: every staged
-      // write's input is hash-partitioned by date first. Without that
-      // the write emits every upstream partition's sliver
-      // into every date dir (micro-batch × 32 tasks = up to 32 files
-      // per partition PER COMMIT), and the per-commit rollback/
-      // migration listings then grow linearly with commit count — the
-      // long-run profile measured commit cost climbing 1.3 → 3.8 s
-      // over 300 commits from exactly this. The shuffle is one pass
-      // over the (small) batch; a genuinely huge micro-batch hashing
-      // onto few date keys would raise `filesPerPartition`-style fan-
-      // out instead, the same dial Lifecycle.compact exposes.
+      // write reads the date-partitioned copy, so each date's rows come
+      // from one task. Without that the write emits every upstream
+      // partition's sliver into every date dir, and the per-commit
+      // rollback/migration listings then grow linearly with commit
+      // count — the long-run profile measured commit cost climbing
+      // 1.3 → 3.8 s over 300 commits from exactly this. The price: a
+      // genuinely huge micro-batch on few dates runs each date's dedupe,
+      // writes and bloom in one task; spreading it would take a per-date
+      // file fan-out, the dial Lifecycle.compact exposes.
       def stagedWrite(df: DataFrame, dir: String): Unit =
         df.write.mode("overwrite").partitionBy("event_date").parquet(dir)
       if (!keyedDedup) {
-        stagedWrite(fresh.repartition(col("event_date")), staging.toString)
+        stagedWrite(fresh, staging.toString)
       } else {
         // keyed mode (the ON CONFLICT DO NOTHING twin): dedup authority
         // is the COMMITTED key sidecar index, not a data read-back.
@@ -302,17 +320,15 @@ object Streams {
         // existed take a one-time migration read-back folded into this
         // commit's segment.
         val prefixes = KeyIndex.committedPrefixes(fs, outDir)
-        val migrating = touched.filter(d =>
-          KeyIndex.needsMigration(fs, outDir, d, prefixes))
+        val migrating = listed.filter { case (_, l) => KeyIndex.needsMigration(l, prefixes) }
         // abandoned-lineage residue (reader-visible files carrying no
         // committed prefix) in the migrating partitions: its keys ride
         // the read-back below into this commit's segment, and the files
         // themselves are adopted under this batch's prefix after the
         // marker lands (see the post-marker step)
-        adoptable = migrating.toSeq.flatMap(d =>
-          KeyIndex.uncoveredDataFiles(fs, outDir, d, prefixes))
-        val blooms = touched.flatMap(d =>
-          KeyIndex.loadBlooms(fs, outDir, d, prefixes))
+        adoptable = migrating.toSeq.flatMap { case (_, l) =>
+          KeyIndex.uncoveredDataFiles(l.data, prefixes) }
+        val blooms = listed.flatMap { case (_, l) => KeyIndex.loadBlooms(fs, l.idx, prefixes) }
         val hashCol = KeyIndex.keyHashCol(fresh, keys)
         val bloomsB = spark.sparkContext.broadcast(blooms.toArray)
         // driver-merged sketch probed per batch row — a deliberate
@@ -320,18 +336,20 @@ object Streams {
         // bloom_filter_agg, which would mean scanning the very keys the
         // sketch exists to avoid reading)
         val bloomHit = udf((h: Long) => bloomsB.value.exists(_.mightContain(h)))
-        val anyCandidate =
-          blooms.nonEmpty && !fresh.filter(bloomHit(hashCol)).isEmpty
+        // every partition reports whether it holds a hit: one job
+        // whatever the partition count (a limit-1 probe runs a job per
+        // round of partitions it scans)
+        val anyCandidate = blooms.nonEmpty && fresh.filter(bloomHit(hashCol)).rdd
+          .mapPartitions(rows => Iterator(rows.hasNext)).collect().contains(true)
         val migratedWithDate =
           if (migrating.isEmpty) None
           else Some(Reads.parquet(spark, outDir)
-            .filter(col("event_date").isInCollection(migrating.toSeq))
+            .filter(col("event_date").isInCollection(migrating.map(_._1).toSeq))
             .select(col("event_date") +: keys.map(col): _*).persist())
         try {
           val segmentFiles =
             if (!anyCandidate) Seq.empty
-            else touched.flatMap(d =>
-              KeyIndex.committedKeyFiles(fs, outDir, d, prefixes))
+            else listed.flatMap { case (_, l) => KeyIndex.committedKeyFiles(l.idx, prefixes) }
               .map(_.toString).toSeq
           val existing = Seq(
             if (segmentFiles.nonEmpty)
@@ -339,13 +357,13 @@ object Streams {
             else None,
             migratedWithDate.map(_.select(keys.map(col): _*))
           ).flatten.reduceOption(_ unionByName _)
-          // ONE pass: the anti-joined rows are hash-partitioned by date
-          // and pinned, and the data, the key segment and the blooms all
-          // read that copy — each date's rows sit in one partition, so
-          // both writes stay one file per touched date and every date's
-          // bloom is sized and built in the same single job
-          val staged = existing.fold(fresh)(fresh.join(_, keys, "left_anti"))
-            .repartition(col("event_date")).persist()
+          // the anti-join compares keys exactly against a broadcast
+          // build side, so its output keeps the copy's date partitioning
+          // and is pinned once: the data, the key segment and the blooms
+          // all read it, both writes stay one file per touched date, and
+          // every date's bloom is sized and built in the same single job
+          val staged = existing.fold(fresh)(e =>
+            pin(fresh.join(broadcast(e), keys, "left_anti")))
           try {
             stagedWrite(staged, staging.toString)
             // sidecar segment for this commit: the keys it inserts, plus
@@ -362,49 +380,35 @@ object Streams {
                 KeyIndex.writeBloom(fs,
                   p(s"$staging/_keyidx/event_date=$d/bloom.bin"), bloom)
               }
-          } finally staged.unpersist()
+          } finally unpin(staged)
         } finally migratedWithDate.foreach(_.unpersist())
       }
-    } finally fresh.unpersist()
+    } finally unpin(fresh)
     if (crash == CrashAfterStage) throw new RuntimeException("injected crash: after stage")
-    // promote: move each staged partition's data files into the live tree
-    fs.listStatus(staging).filter(_.isDirectory)
-      .filter(_.getPath.getName.startsWith("event_date="))
-      .foreach { part =>
-        val target = p(s"$outDir/${part.getPath.getName}")
-        fs.mkdirs(target)
-        fs.listStatus(part.getPath)
-          .filter(f => f.isFile && !f.getPath.getName.startsWith("_"))
-          .foreach { f =>
-            val dst = new org.apache.hadoop.fs.Path(target,
-              s"$filePrefix${f.getPath.getName}")
-            fs.delete(dst, true) // idempotent re-promote
-            if (!fs.rename(f.getPath, dst))
-              throw new java.io.IOException(s"promote: cannot move ${f.getPath}")
+    // promote: move each staged partition's files into the live tree
+    // under this batch's prefix — the data, then (keyed mode) the key
+    // sidecar's segments and blooms, which land under _keyidx,
+    // authoritative only once the marker below exists and rolled back
+    // by prefix like the data on replay
+    def promote(from: String, to: String)(named: (String, Int) => String): Unit =
+      if (fs.exists(p(from)))
+        fs.listStatus(p(from))
+          .filter(d => d.isDirectory && d.getPath.getName.startsWith("event_date="))
+          .foreach { part =>
+            val target = p(s"$to/${part.getPath.getName}")
+            fs.mkdirs(target)
+            fs.listStatus(part.getPath)
+              .filter(f => f.isFile && !f.getPath.getName.startsWith("_"))
+              .zipWithIndex.foreach { case (f, i) =>
+                val dst = new org.apache.hadoop.fs.Path(target, named(f.getPath.getName, i))
+                fs.delete(dst, true) // idempotent re-promote
+                if (!fs.rename(f.getPath, dst))
+                  throw new java.io.IOException(s"promote: cannot move ${f.getPath}")
+              }
           }
-      }
-    // promote the key sidecar (keyed mode): segments + blooms land under
-    // _keyidx with the SAME file prefix — authoritative only once the
-    // marker below exists, rolled back by prefix like the data on replay
-    val stagedIdx = p(s"$staging/_keyidx")
-    if (fs.exists(stagedIdx))
-      fs.listStatus(stagedIdx).filter(_.isDirectory)
-        .filter(_.getPath.getName.startsWith("event_date="))
-        .foreach { part =>
-          val target = p(s"$outDir/_keyidx/${part.getPath.getName}")
-          fs.mkdirs(target)
-          fs.listStatus(part.getPath)
-            .filter(f => f.isFile && !f.getPath.getName.startsWith("_"))
-            .zipWithIndex.foreach { case (f, i) =>
-              val name =
-                if (f.getPath.getName == "bloom.bin") s"${filePrefix}bloom.bin"
-                else s"${filePrefix}keys-$i.parquet"
-              val dst = new org.apache.hadoop.fs.Path(target, name)
-              fs.delete(dst, true)
-              if (!fs.rename(f.getPath, dst))
-                throw new java.io.IOException(s"promote: cannot move ${f.getPath}")
-            }
-        }
+    promote(staging.toString, outDir)((name, _) => s"$filePrefix$name")
+    promote(s"$staging/_keyidx", s"$outDir/_keyidx")((name, i) =>
+      if (name == "bloom.bin") s"${filePrefix}bloom.bin" else s"${filePrefix}keys-$i.parquet")
     if (crash == CrashAfterPromote) throw new RuntimeException("injected crash: after promote")
     fs.mkdirs(marker.getParent)
     fs.create(marker, true).close()

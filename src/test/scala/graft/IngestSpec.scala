@@ -65,4 +65,23 @@ class IngestSpec extends SparkSpec {
     assert(summary.count() == 4 * 9)
     assert(summary.filter($"n" =!= 100).count() == 0)
   }
+
+  test("T9 anomaly flag: thresholds fold into the plan, equal to the config join, no broadcast") {
+    import org.apache.spark.graftbridge.JobCounter
+    val (valid, _) = Ingest.ingest(spark, Ingest.generateRaw(spark, 8, 100), now)
+    // the config table joined on device_type, as a reference
+    val joined = valid.drop("is_anomaly")
+      .join(broadcast(Ingest.thresholdConfig(spark)), Seq("device_type"), "left")
+      .withColumn("is_anomaly", col("min_ok").isNotNull &&
+        (col("value") < col("min_ok") || col("value") > col("max_ok")))
+      .drop("min_ok", "max_ok")
+    assert(valid.schema == joined.schema)
+    val (got, jobs) = JobCounter.jobsIn(spark.sparkContext)(valid.collect())
+    assert(got.map(_.toString).sorted.sameElements(joined.collect().map(_.toString).sorted))
+    assert(got.count(_.getAs[Boolean]("is_anomaly")) > 0)
+    def plan(df: org.apache.spark.sql.DataFrame) = df.queryExecution.executedPlan.toString
+    assert(plan(joined).contains("BroadcastExchange"))
+    assert(!plan(valid).contains("BroadcastExchange"), plan(valid))
+    assert(jobs.size == 1, jobs.map(JobCounter.callSite).mkString(", "))
+  }
 }

@@ -475,4 +475,44 @@ class StreamingSpec extends SparkSpec {
     assert(!new java.io.File(s"$outDir/_keyidx/event_date=2024-01-01/batch1-bloom.bin").exists())
     assert(spark.read.parquet(outDir).count() == sampleRows.size + day2.size + 1)
   }
+
+  test("keyed commit job budget: one shuffle, at most 5 jobs for new keys and 7 on a bloom hit") {
+    import spark.implicits._
+    import org.apache.spark.graftbridge.JobCounter
+    val outDir = Files.createTempDirectory("kbudget_out").toString
+    val day2 = Seq(
+      EventRow(5, ts("2024-01-02 08:00:00"), 3, "view", 5.0),
+      EventRow(6, ts("2024-01-02 09:30:00"), 4, "click", 6.0))
+    def commit(rows: Seq[EventRow], id: Long) = {
+      val batch = rows.toDF()
+      JobCounter.jobsIn(spark.sparkContext)(Streams.commitBatch(batch, outDir, id))._2
+    }
+    // a two-date batch into an empty table: no bloom to probe, so the
+    // materialization, the data and segment writes and the blooms
+    val first = commit(sampleRows ++ day2, 0)
+    // duplicates of both dates plus a new key: the probe hits, and the
+    // segment keys are broadcast to the anti-join
+    val second = commit(sampleRows.take(2) ++ day2 :+
+      EventRow(7, ts("2024-01-02 10:00:00"), 5, "view", 7.0), 1)
+    Seq((first, 5, "all-new"), (second, 7, "bloom-hit")).foreach {
+      case (jobs, budget, name) =>
+        val sites = jobs.map(JobCounter.callSite).mkString(", ")
+        assert(jobs.size <= budget, s"$name commit: ${jobs.size} jobs at $sites")
+        assert(JobCounter.shuffles(jobs).size == 1,
+          s"$name commit: shuffles ${JobCounter.shuffles(jobs)} at $sites")
+    }
+    val live = spark.read.parquet(outDir)
+    assert(live.count() == sampleRows.size + day2.size + 1)
+    assert(live.select("user_id", "ts").distinct().count() == live.count())
+  }
+
+  test("keyed commit requires ts among the keys and fails before any write") {
+    import spark.implicits._
+    val outDir = Files.createTempDirectory("knots_out").resolve("store")
+    intercept[IllegalArgumentException] {
+      Streams.commitBatch(sampleRows.toDF(), outDir.toString, 0,
+        keys = Seq("user_id", "event_id"))
+    }
+    assert(!Files.exists(outDir))
+  }
 }

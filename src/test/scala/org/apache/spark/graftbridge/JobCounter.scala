@@ -27,6 +27,10 @@ object JobCounter {
     } finally sc.removeSparkListener(listener)
   }
 
+  /** The distinct shuffle exchanges the jobs ran or reused. */
+  def shuffles(jobs: Seq[SparkListenerJobStart]): Set[Int] =
+    jobs.flatMap(_.stageInfos).flatMap(_.shuffleDepId).toSet
+
   /** Where a job came from, for failure messages. */
   def callSite(e: SparkListenerJobStart): String =
     Option(e.properties).flatMap(p => Option(p.getProperty("callSite.short")))
