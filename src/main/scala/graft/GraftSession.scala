@@ -30,6 +30,15 @@ import org.apache.spark.sql.SparkSession
   *    wrap-around int64 arithmetic.
   *  - AQE on: runtime re-plan (skew-join splitting, partition
   *    coalescing) is part of the 100 TB posture.
+  *  - [[graft.functions.GraftExtensions]]: the graft SQL functions and
+  *    the [[graft.plan.OneTaskSort]] rule. A global `ORDER BY` whose
+  *    input fits in one advisory partition
+  *    (`spark.sql.adaptive.advisoryPartitionSizeInBytes`, 64 MB by
+  *    default — the most AQE coalescing gives one reducer) sorts in one
+  *    task: no range-sampling job, no sort shuffle. Larger inputs keep
+  *    the range exchange, so one task never gets more than AQE would
+  *    give it. A bare `SparkSession.builder()` session lacks the rule
+  *    and pays both jobs on every small sort.
   *
   * ImageIO's disk-backed stream cache is also disabled here (the other
   * r15 syscall fix — two file-metadata syscalls per decoded row): it
@@ -54,6 +63,7 @@ object GraftSession {
       .config("spark.sql.ansi.enabled", "false")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.shuffle.sort.bypassMergeThreshold", "2")
+      .withExtensions(new graft.functions.GraftExtensions)
 
   /** `local[cpus]` convenience used by the mains: shuffle partitions
     * sized to the core count, UI off (a local session's UI server is

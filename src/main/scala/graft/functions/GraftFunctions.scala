@@ -145,9 +145,14 @@ object GraftFunctions {
 
 /** `spark.sql.extensions=graft.functions.GraftExtensions` — injects the
   * function set at session build, the standard way a library ships SQL
-  * functions to sessions it does not construct.
+  * functions to sessions it does not construct, and the
+  * [[graft.plan.OneTaskSort]] rule into the static and AQE runtime
+  * optimizers. `GraftSession.builder` installs it on every session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.functions.foreach(ext.injectFunction)
+    ext.injectOptimizerRule(_ => graft.plan.OneTaskSort)
+    ext.injectRuntimeOptimizerRule(_ => graft.plan.OneTaskSort)
+  }
 }

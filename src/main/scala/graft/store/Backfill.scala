@@ -16,10 +16,16 @@ import org.apache.spark.sql.functions._
   * and overwriting them in place (dynamic partition overwrite), leaving
   * every other partition's files untouched.
   *
-  * Scale: the recompute reads only the raw-table date partitions in
-  * range (partition pruning on the filter), shuffles once for the
-  * windowed groupBy, and the overwrite is per-partition file
-  * replacement — cost tracks the refreshed range, never the table size.
+  * Scale: the recompute filters the raw table on `ts`, shuffles once
+  * for the windowed groupBy, and the overwrite is per-partition file
+  * replacement, so only the refreshed `bucket_date` partitions are
+  * rewritten. The read is not range-bounded yet: on the keyed store,
+  * partitioned by `event_date`, a `ts` filter prunes no partition (it
+  * is only a data filter), so every refresh — and `servedHourly`'s raw
+  * tail — lists every date and opens every file's footer; parquet
+  * row-group statistics skip the out-of-range rows, but listing and
+  * footer cost track the table size. ROADMAP item 2 derives
+  * `event_date` bounds from the `ts` bounds to fix this.
   */
 object Backfill {
 
